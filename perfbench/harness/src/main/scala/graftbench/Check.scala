@@ -1,6 +1,6 @@
 package graftbench
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,20 +8,25 @@ import graft.Pipeline
 import graft.taskrouter.{Ingest, Model}
 
 /** Output checks, run untimed after a workload's timing. Each returns
-  * the list of problems found; an empty list is a pass. */
+  * the list of problems found; an empty list is a pass. The tables
+  * compared are small, so both sides are collected and compared as
+  * multisets of rows in the benchmark process. */
 object Check {
   private val Shown = 3
 
-  /** Rows in `got` but not `want` and the reverse. */
-  private def diff(got: DataFrame, want: DataFrame): (DataFrame, DataFrame) =
-    (got.exceptAll(want), want.exceptAll(got))
+  private def bag(rows: Seq[Row]): Map[Row, Int] = rows.groupBy(identity).map { case (r, g) => r -> g.size }
 
-  private def describe(what: String, extra: DataFrame, missing: DataFrame): Seq[String] = {
-    val (e, m) = (extra.count(), missing.count())
-    if (e == 0 && m == 0) Nil
-    else Seq(s"$what: $e unexpected rows, $m missing rows; e.g. unexpected " +
-      extra.limit(Shown).collect().mkString(" | ") + " missing " +
-      missing.limit(Shown).collect().mkString(" | "))
+  /** Rows of `a` not matched by a row of `b`, with multiplicity. */
+  private def minus(a: Seq[Row], b: Seq[Row]): Seq[Row] = {
+    val nb = bag(b)
+    bag(a).toSeq.flatMap { case (r, n) => Seq.fill(n - nb.getOrElse(r, 0))(r) }
+  }
+
+  private def describe(what: String, got: Seq[Row], want: Seq[Row]): Seq[String] = {
+    val (extra, missing) = (minus(got, want), minus(want, got))
+    if (extra.isEmpty && missing.isEmpty) Nil
+    else Seq(s"$what: ${extra.size} unexpected rows, ${missing.size} missing rows; e.g. unexpected " +
+      extra.take(Shown).mkString(" | ") + " missing " + missing.take(Shown).mkString(" | "))
   }
 
   /** Workers with two consecutive events further apart than `ttlMs`:
@@ -37,28 +42,24 @@ object Check {
   }
 
   /** The merged streaming tables under `out` against the batch
-    * derivation (`wantSeg`, `wantAgents`) over exactly the emitted
+    * derivation (`wantSegments`, `wantAgents`) over exactly the emitted
     * `lines`. */
   def streaming(spark: SparkSession, lines: Seq[String], out: String, ttlMs: Long,
       wantSegments: DataFrame, wantAgents: DataFrame): (Seq[String], Map[String, Long]) = {
     import spark.implicits._
     val parsed = Ingest.parseJson(spark, spark.createDataset(lines))
-    val wantSeg = wantSegments.select(Model.segmentColumns.map(col): _*).cache()
-    val gotSeg = Pipeline.mergedSegments(spark, out).cache()
-    val isStatus = col("segment_kind").startsWith(Model.AgentStatus)
-    val (segExtra, segMissing) =
-      diff(gotSeg.filter(!isStatus), wantSeg.filter(!isStatus))
-    val gap = ttlGapWorkers(parsed, ttlMs).cache()
-    val (stExtra, stMissing) = diff(gotSeg.filter(isStatus), wantSeg.filter(isStatus))
-    val unexplained = (df: DataFrame) => df.join(gap, Seq("agent_uuid"), "left_anti")
-    val (agExtra, agMissing) = diff(Pipeline.mergedAgents(spark, out),
-      wantAgents.select(Model.agentColumns.map(col): _*))
-    val problems = describe("conversation segments", segExtra, segMissing) ++
+    def rows(df: DataFrame, cols: Seq[String]) = df.select(cols.map(col): _*).collect().toSeq
+    val wantSeg = rows(wantSegments, Model.segmentColumns)
+    val gotSeg = rows(Pipeline.mergedSegments(spark, out), Model.segmentColumns)
+    val gap = ttlGapWorkers(parsed, ttlMs).collect().map(_.getString(0)).toSet
+    def isStatus(r: Row) = Option(r.getAs[String]("segment_kind")).exists(_.startsWith(Model.AgentStatus))
+    def unexplained(rs: Seq[Row]) = rs.filterNot(r => gap(r.getAs[String]("agent_uuid")))
+    val problems =
+      describe("conversation segments", gotSeg.filterNot(isStatus), wantSeg.filterNot(isStatus)) ++
       describe("agent status segments outside a TTL gap",
-        unexplained(stExtra), unexplained(stMissing)) ++
-      describe("agents", agExtra, agMissing)
-    val counts = Map("segments" -> wantSeg.count(), "ttl_gap_workers" -> gap.count())
-    Seq(wantSeg, gotSeg, gap).foreach(_.unpersist())
-    (problems, counts)
+        unexplained(gotSeg.filter(isStatus)), unexplained(wantSeg.filter(isStatus))) ++
+      describe("agents", rows(Pipeline.mergedAgents(spark, out), Model.agentColumns),
+        rows(wantAgents, Model.agentColumns))
+    (problems, Map("segments" -> wantSeg.size.toLong, "ttl_gap_workers" -> gap.size.toLong))
   }
 }

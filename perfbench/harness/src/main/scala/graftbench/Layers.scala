@@ -9,6 +9,9 @@ object Layers {
     val s = xs.filterNot(_.isNaN).toSeq
     if (s.isEmpty) 0.0 else Stats.median(s)
   }
+  /** Like `med`, but NaN (printed as idle) when there is no sample. */
+  private def idle(xs: Iterable[Double]): Double =
+    if (xs.isEmpty) Double.NaN else med(xs)
 
   /** Streaming layers for the given queries (label, query id,
     * checkpoint): micro-batch phases, state, and the MERGE sink's work
@@ -24,29 +27,44 @@ object Layers {
     val dataKeys = data.map(b => (b.queryId, b.batchId)).toSet
     val batchJobs = byBatch.filter { case (k, _) => dataKeys(k) }
 
-    // MERGE phases: the sink's Dataset actions in each batch, in order —
-    // localCheckpoint (delta, which also runs parse and the state
-    // machine), collect (touched set), localCheckpoint (merged), write.
-    // Each action is one SQL execution; its jobs carry its id.
-    val Phases = Seq("delta", "touched", "merged", "write")
-    val actions = batchJobs.map { case (k, js) =>
-      k -> js.filter(_.execId >= 0).groupBy(_.execId).values.toSeq.sortBy(_.map(_.startMs).min)
-    }
-    val phases = actions.values.map { groups =>
-      Phases.zipAll(groups.map(g => (g.map(_.endMs).max - g.map(_.startMs).min).toDouble), "", Double.NaN)
-        .filter(_._1.nonEmpty).toMap
-    }.toSeq
-
-    // the sink's table write of each batch: the write execution reported
-    // for that query's table path closest after the batch's write jobs
-    val table = queries.map { case (label, qid, _) => qid -> s"${label}_latest" }.toMap
-    val writeQes = t.qes.asScala.toSeq.filter(_.writePath.isDefined)
-    val writes: Seq[((String, Long), Map[String, Long])] = actions.toSeq.flatMap { case (k, groups) =>
-      groups.lift(3).flatMap { g =>
-        val end = g.map(_.endMs).max
-        writeQes.filter(q => q.writePath.exists(_.endsWith(table(k._1))) && q.atMs >= end - 50)
-          .sortBy(_.atMs).headOption.map(q => k -> q.writeMetrics)
+    // MERGE phases, named by what ran them, not by position: each SQL
+    // execution of a batch is labelled by its action name as Spark
+    // reports it at execution end — the execution that writes files is
+    // `write`, `collect` is the touched set, and of the two
+    // `localCheckpoint`s the first is the delta (which also runs parse
+    // and the state machine) and the second the merged frame, which reads
+    // the delta. Anything else (a listing job of the table read, say) is
+    // `other`. Only batches with exactly delta, touched, merged and write
+    // count towards the phase medians; a no-op merge (delta and touched
+    // only) is left out, and any other shape is counted as unclassified
+    // and reported.
+    val Phases = Seq("delta", "merged", "touched", "write")
+    val labelled: Map[(String, Long), Seq[(String, Seq[JobRec])]] = batchJobs.map { case (k, js) =>
+      val execs = js.filter(_.execId >= 0).groupBy(_.execId).toSeq.sortBy(_._2.map(_.startMs).min)
+      def name(id: Long) = Option(t.execNames.get(id)).getOrElse("")
+      val checkpoints = execs.map(_._1).filter(name(_) == "localCheckpoint")
+      k -> execs.map { case (id, g) =>
+        (if (t.execWrites.containsKey(id)) "write"
+          else if (name(id) == "collect") "touched"
+          else checkpoints.indexOf(id) match { case 0 => "delta"; case 1 => "merged"; case _ => "other" }) -> g
       }
+    }
+    def wall(g: Seq[JobRec]) = (g.map(_.endMs).max - g.map(_.startMs).min).toDouble
+    val complete = labelled.filter { case (_, ls) => ls.map(_._1).filter(_ != "other").sorted == Phases }
+    val noop = labelled.filter { case (_, ls) => ls.map(_._1).filter(_ != "other").sorted == Seq("delta", "touched") }
+    val unclassified = labelled.size - complete.size - noop.size
+    if (unclassified > 0)
+      System.err.println(s"[layers] $unclassified data batches without the expected MERGE actions; " +
+        "left out of merge.*: " + labelled.filterNot { case (k, _) => complete.contains(k) || noop.contains(k) }
+          .values.take(3).map(_.map { case (l, g) =>
+            s"$l:${g.map(j => Option(t.execNames.get(j.execId)).getOrElse("?")).distinct.mkString("/")}"
+          }.mkString(", ")).mkString(" | "))
+    val phases = complete.values.map(_.groupBy(_._1).map { case (l, gs) => l -> gs.map(g => wall(g._2)).sum }).toSeq
+
+    // the sink's table write of each complete batch, from its write
+    // execution
+    val writes: Seq[((String, Long), Map[String, Long])] = complete.toSeq.flatMap { case (k, ls) =>
+      ls.find(_._1 == "write").flatMap { case (_, g) => Option(t.execWrites.get(g.head.execId)).map(k -> _) }
     }
     val admitted: Map[(String, Long), Seq[String]] = queries.flatMap { case (_, qid, ck) =>
       ck.fileBatches.toSeq.map { case (f, b) => (qid, b) -> f }
@@ -70,10 +88,13 @@ object Layers {
       "streaming.shuffle_bytes" -> med(batchJobs.values.map(_.map(_.shuffleBytes).sum.toDouble)),
       "sources.files_per_batch" -> med(admitted.filter { case (k, _) => dataKeys(k) }.values.map(_.size.toDouble)),
       "sources.events_per_batch" -> med(data.map(_.inputRows.toDouble)),
-      "merge.delta_ms" -> med(phases.map(_("delta"))),
-      "merge.touched_ms" -> med(phases.map(_("touched"))),
-      "merge.merged_ms" -> med(phases.map(_("merged"))),
-      "merge.write_ms" -> med(phases.map(_("write"))),
+      "merge.batches_complete" -> complete.size.toDouble,
+      "merge.batches_noop" -> noop.size.toDouble,
+      "merge.batches_unclassified" -> unclassified.toDouble,
+      "merge.delta_ms" -> idle(phases.map(_("delta"))),
+      "merge.touched_ms" -> idle(phases.map(_("touched"))),
+      "merge.merged_ms" -> idle(phases.map(_("merged"))),
+      "merge.write_ms" -> idle(phases.map(_("write"))),
       "merge.partitions_touched" -> med(writes.map(_._2.getOrElse("numParts", 0L).toDouble)),
       "merge.bytes_written" -> med(writes.map(_._2.getOrElse("numOutputBytes", 0L).toDouble)),
       "merge.files_written" -> med(writes.map(_._2.getOrElse("numFiles", 0L).toDouble)),
@@ -96,7 +117,7 @@ object Layers {
     val spans = t.spanSeq
     val qes = t.qes.asScala.toSeq
     execs.map { e =>
-      spans.find(s => s.layer == "query" && s.name == e.name && s.attrs.get("pass").contains(e.pass))
+      spans.find(s => s.layer == "query" && s.attrs.get("seq").contains(e.seq))
         .map { s =>
           val kids = spans.filter(_.parent == s.id)
           def under(layer: String) = kids.filter(_.layer == layer)

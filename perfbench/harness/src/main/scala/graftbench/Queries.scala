@@ -9,23 +9,28 @@ import org.apache.spark.sql.SparkSession
 import graft.{SparkEntry, Tables}
 
 /** `queries`: one closed-loop client running a fixed subset of
-  * `SparkEntry.queries`. Pass 1 is each query's first run in the JVM
+  * `SparkEntry.queries`. Pass 0 is each query's first run in the JVM
   * (cold); later passes are warm and run in a seeded order. */
 object Queries {
   /** Cells that take well under a second at the project's bench scale,
-    * one or two from every query module except the TaskRouter reporting
+    * one from every query module except the TaskRouter reporting
     * queries (their one-time staging does not fit the run budget; the
-    * report path runs in `live`). A cut to the per-query fixed floor
-    * shows here. */
+    * report path runs in `live`), plus TPC-H Q6. A cut to the per-query
+    * fixed floor shows here. */
   val Light: Seq[String] = Seq(
-    "q1_agg", "q_sql_tpch6", "q_join_anti", "q_text_fingerprint", "q_dedup_minhash",
-    "q_sim_ann_lsh", "q_sample_hash", "q_label_majority", "q_graph_degree_hist",
-    "q_mm_byte_hist", "q_zonemap_scan")
+    "q1_agg", "q_sql_tpch6", "q_text_fingerprint", "q_dedup_minhash", "q_sim_ann_lsh",
+    "q_label_majority", "q_graph_degree_hist", "q_mm_byte_hist", "q_zonemap_scan")
 
-  /** Costly non-staging cells whose oracle is cheap to evaluate:
+  /** A costly non-staging cell whose oracle is cheap to evaluate:
     * executor work dominates, so a loss here cannot hide behind a
     * fixed-floor gain on the light set. */
-  val Heavy: Seq[String] = Seq("q_rec_itemcf", "q_rfm_segments")
+  val Heavy: Seq[String] = Seq("q_rec_itemcf")
+
+  /** Runs of each heavy cell per warm pass: one heavy wall varies by
+    * about a fifth between runs in the same process (Spark still
+    * compiles code in warm runs), so its median needs more samples
+    * than the light cells'. */
+  val HeavyRuns = 2
 
   /** Query module of each name, for the per-module layer sums. */
   lazy val moduleOf: Map[String, String] = Seq(
@@ -41,43 +46,52 @@ object Queries {
     "operators" -> graft.operators.ZoneMap.queries
   ).flatMap { case (m, qs) => qs.keys.map(_ -> m) }.toMap
 
-  final case class Exec(name: String, pass: Int, wallS: Double, ok: Boolean,
+  final case class Exec(seq: Int, name: String, pass: Int, wallS: Double, ok: Boolean,
       error: String, layer: Map[String, Double])
 
   private def stageDirs(root: File): Set[String] =
     Option(root.listFiles).getOrElse(Array.empty[File]).filter(_.isDirectory)
       .flatMap(app => Option(app.listFiles).getOrElse(Array.empty[File]).map(_.getPath)).toSet
 
-  def run(spark: SparkSession, a: Args): Result = {
-    val dir = a.data
-    val light = if (a.smoke) Light.take(8) else Light
-    val heavy = if (a.smoke) Heavy.take(2) else Heavy
-    val set: Map[String, String] = (light.map(_ -> "light") ++ heavy.map(_ -> "heavy")).toMap
-    val stageRoot = new File("target/graft-stage")
+  /** Warm passes of a run: fixed by `--seconds` alone (one per three
+    * seconds, at least three), so every commit gets the same number of
+    * samples per query whatever its speed. */
+  def warmPasses(a: Args): Int = if (a.smoke) 2 else math.max(3, a.seconds / 3)
 
-    // set-up, as the project's Bench does it: fact-table relayout, then
-    // the graph edge staging
+  final case class Prepared(relayoutS: Double)
+
+  /** Set-up, as the project's Bench does it: fact-table relayout, then
+    * the graph edge staging. */
+  def prepare(spark: SparkSession, a: Args, round: Int): Prepared = {
     val (_, relayoutS) = Clock.time(Trace.span("relayout", "tables")(
       Seq("lineitem", "orders", "events", "documents", "embeddings")
-        .foreach(t => Tables.load(spark, dir, t))))
-    Trace.span("staging", "graph")(graft.graph.GraphOps.stageEdges(spark, dir))
-    val setupS = Main.sinceJvmStart()
+        .foreach(t => Tables.load(spark, a.data, t))))
+    Trace.span("staging", "graph")(graft.graph.GraphOps.stageEdges(spark, a.data))
+    Prepared(relayoutS)
+  }
+
+  def run(spark: SparkSession, a: Args, prep: Prepared): Result = {
+    val dir = a.data
+    val light = if (a.smoke) Light.take(8) else Light
+    val heavy = Heavy
+    val set: Map[String, String] = (light.map(_ -> "light") ++ heavy.map(_ -> "heavy")).toMap
+    val stageRoot = new File("target/graft-stage")
 
     val rnd = new scala.util.Random(a.seed)
     val execs = mutable.ArrayBuffer.empty[Exec]
     val passStages = mutable.ArrayBuffer.empty[(Int, Int, Long)]
     val loads = mutable.ArrayBuffer.empty[Map[String, Double]]
 
-    // pass 1 writes each result as parquet for the oracle check; warm
-    // passes write to the noop sink, as the project's Bench does
+    // the cold pass writes each result as parquet for the oracle check;
+    // warm passes write to the noop sink, as the project's Bench does
     val checkDir = Fs.fresh(s"${a.work}/check")
-    def exec(name: String, pass: Int): Exec = {
+    def exec(seq: Int, name: String, pass: Int): Exec = {
       val fn = SparkEntry.queries(name)
       val c0 = Codegen.mark()
       val t0 = System.nanoTime()
       var construct = 0.0
       try {
-        Trace.span(name, "query", Map("pass" -> pass, "set" -> set(name))) {
+        Trace.span(name, "query", Map("seq" -> seq, "pass" -> pass, "set" -> set(name))) {
           val df = Trace.span("construct", "query.construct")(fn(spark, dir))
           construct = Clock.sec(t0)
           Trace.span("exec", "query.exec") {
@@ -86,26 +100,24 @@ object Queries {
           }
         }
         val wall = Clock.sec(t0)
-        Exec(name, pass, wall, ok = true, "", Map("construct_ms" -> construct * 1000,
+        Exec(seq, name, pass, wall, ok = true, "", Map("construct_ms" -> construct * 1000,
           "exec_ms" -> (wall - construct) * 1000, "codegen_ms" -> Codegen.msSince(c0)))
       } catch { case e: Exception =>
-        Exec(name, pass, Clock.sec(t0), ok = false, e.toString.take(300), Map.empty)
+        Exec(seq, name, pass, Clock.sec(t0), ok = false, e.toString.take(300), Map.empty)
       }
     }
 
-    // pass 1 (cold), then warm passes until `seconds` have passed since
-    // the loop started (at least two)
-    val deadline = System.nanoTime() + a.seconds * 1000000000L
-    var pass = 0
-    while (pass < 3 || System.nanoTime() < deadline) {
+    // pass 0 (cold), then a fixed number of warm passes in seeded order
+    val passes = 1 + warmPasses(a)
+    (0 until passes).foreach { pass =>
       val before = stageDirs(stageRoot)
       val l0 = Load.sample()
-      val order = if (pass == 0) (light ++ heavy) else rnd.shuffle(light ++ heavy)
-      order.foreach(q => execs += exec(q, pass))
+      val order = if (pass == 0) (light ++ heavy)
+        else rnd.shuffle(light ++ heavy.flatMap(Seq.fill(HeavyRuns)(_)))
+      order.foreach(q => execs += exec(execs.size, q, pass))
       val added = stageDirs(stageRoot) -- before
       passStages += ((pass, added.size, added.toSeq.map(p => Fs.bytes(new File(p))).sum))
       loads += Load.between(l0, Load.sample())
-      pass += 1
     }
 
     val ok = execs.filter(_.ok)
@@ -124,7 +136,7 @@ object Queries {
     named("query_p90_s") = Stats.quantile(warm.map(_.wallS).toSeq, 0.9)
 
     val layers = mutable.LinkedHashMap.empty[String, Double]
-    layers("tables.relayout_s") = relayoutS
+    layers("tables.relayout_s") = prep.relayoutS
     layers("cache.stage_builds") = passStages.head._2.toDouble
     layers("cache.stage_bytes") = passStages.head._3.toDouble
     var layerSums: Map[String, Any] = Map.empty
@@ -154,15 +166,14 @@ object Queries {
 
     val attempted = execs.size.toLong
     val failed = execs.count(!_.ok).toLong
-    Result(setupS, attempted, failed, problems.toSeq,
+    Result(attempted, failed, problems.toSeq,
       gate = Map(
         "light_s" -> named("q_light_s"),
         "heavy_s" -> named("q_heavy_s"),
-        "op_p50_s" -> named("query_p50_s"),
-        "op_p90_s" -> named("query_p90_s")),
+        "op_p50_s" -> named("query_p50_s")),
       named = named.toMap, layers = layers.toMap,
       detail = Map(
-        "passes" -> pass,
+        "passes" -> passes,
         "cold_s" -> cold.map(e => e.name -> e.wallS).toMap,
         "warm_median_s" -> (lightMed ++ heavyMed),
         "set" -> set, "module" -> set.keys.map(n => n -> moduleOf.getOrElse(n, "?")).toMap,

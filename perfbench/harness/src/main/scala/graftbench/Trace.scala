@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -34,8 +34,7 @@ final class JobRec(val jobId: Int, val span: Long, val queryId: String,
 /** What one SQL execution reported when it finished; `atMs`/`atNs` are
   * when the listener saw it (wall clock and monotonic). */
 final case class QeRec(funcName: String, durationMs: Double,
-    phasesMs: Map[String, Long], writePath: Option[String], writeMetrics: Map[String, Long],
-    atMs: Long, atNs: Long) {
+    phasesMs: Map[String, Long], atMs: Long, atNs: Long) {
   /** Monotonic midpoint of the execution. */
   def midNs: Long = atNs - (durationMs * 5e5).toLong
 }
@@ -61,6 +60,12 @@ final class Tracer(spark: SparkSession) {
   private val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
   val qes = new ConcurrentLinkedQueue[QeRec]()
   val batches = new ConcurrentLinkedQueue[BatchRec]()
+  /** SQL execution id → its action name ("localCheckpoint", "collect",
+    * "command", ...), from the execution-end event. */
+  val execNames = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+  /** SQL execution id → metrics of the file write in its plan, for
+    * executions that write files. */
+  val execWrites = new java.util.concurrent.ConcurrentHashMap[Long, Map[String, Long]]()
 
   def span[A](name: String, layer: String, attrs: Map[String, Any] = Map.empty)(f: => A): A = {
     val id = ids.incrementAndGet()
@@ -90,6 +95,13 @@ final class Tracer(spark: SparkSession) {
       jobs.put(e.jobId, rec)
       e.stageIds.foreach(s => stageJob.put(s, rec))
     }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionEnd =>
+        execNames.put(x.executionId, SqlExecutionEnd.name(x))
+        Option(SqlExecutionEnd.qe(x)).flatMap(qe => findWrite(qe.executedPlan)).foreach { w =>
+          execWrites.put(x.executionId, w.cmd.metrics.map { case (k, v) => k -> v.value }) }
+      case _ => ()
+    }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       Option(jobs.get(e.jobId)).foreach(_.endMs = e.time)
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -112,14 +124,7 @@ final class Tracer(spark: SparkSession) {
   private object qeListener extends QueryExecutionListener {
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val phases = qe.tracker.phases.map { case (k, v) => k -> v.durationMs }
-      val write = findWrite(qe.executedPlan)
-      qes.add(QeRec(funcName, durationNs / 1e6, phases,
-        write.flatMap(_.cmd match {
-          case i: InsertIntoHadoopFsRelationCommand => Some(i.outputPath.toString)
-          case _ => None
-        }),
-        write.map(_.cmd.metrics.map { case (k, v) => k -> v.value }).getOrElse(Map.empty),
-        System.currentTimeMillis(), System.nanoTime()))
+      qes.add(QeRec(funcName, durationNs / 1e6, phases, System.currentTimeMillis(), System.nanoTime()))
       ()
     }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()

@@ -22,7 +22,6 @@ import signal
 import subprocess
 import sys
 import time
-import zipfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 WORKLOADS = ("live", "queries")
@@ -86,38 +85,12 @@ def build(root, out):
         sys.stderr.write(p.stdout[-4000:] + p.stderr[-2000:])
         fail("build failed")
     log(f"build took {time.monotonic() - t0:.1f}s")
-    # class data sharing needs every class-path entry to be a jar
-    entries = cp[-1].split(os.pathsep)
-    jar = os.path.join(out, "graftbench.jar")
-    with zipfile.ZipFile(jar, "w") as z:
-        for d, _, files in os.walk(entries[0]):
-            for f in files:
-                z.write(os.path.join(d, f), os.path.relpath(os.path.join(d, f), entries[0]))
-    full = os.pathsep.join([jar] + entries[1:])
-    archive_classes(full, out)
+    full = cp[-1]
     with open(cp_file, "w") as f:
         f.write(full)
     with open(fp_file, "w") as f:
         f.write(fp)
     return full
-
-
-def archive_classes(cp, out):
-    """Record the classes a smoke run loads into a class-data-sharing
-    archive, which every later JVM maps instead of loading and verifying
-    those classes again (several seconds of each run's start-up)."""
-    jsa = os.path.join(out, "graftbench.jsa")
-    if os.path.exists(jsa):
-        os.remove(jsa)
-    work = os.path.join(out, "work", "archive")
-    shutil.rmtree(work, ignore_errors=True)
-    t0 = time.monotonic()
-    res = run_jvm(cp, ["--workload", "live", "--seed", "0", "--seconds", "2", "--trace", "0",
-                       "--data", generate(out, 0, SMOKE_SF), "--smoke", "1"],
-                  work, 4, time.monotonic() + 600, [f"-XX:ArchiveClassesAtExit={jsa}"])
-    shutil.rmtree(work, ignore_errors=True)
-    log(f"class archive {'written' if res and os.path.exists(jsa) else 'not written'} "
-        f"in {time.monotonic() - t0:.1f}s")
 
 
 def generate(out, seed, sf):
@@ -131,17 +104,14 @@ def generate(out, seed, sf):
     return d
 
 
-def run_jvm(cp, args, work, cpus, deadline, jvm_opts=None):
+def run_jvm(cp, args, work, cpus, deadline):
     """One benchmark JVM; returns its result dict (None on failure)."""
-    if jvm_opts is None:
-        jsa = os.path.join(os.path.dirname(cp.split(os.pathsep)[0]), "graftbench.jsa")
-        jvm_opts = [f"-XX:SharedArchiveFile={jsa}"] if os.path.exists(jsa) else []
     os.makedirs(work, exist_ok=True)
     for sub in ("tmp", "spark-local", "warehouse"):
         os.makedirs(os.path.join(work, sub), exist_ok=True)
     out = os.path.join(work, "result.json")
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")] +
-           jvm_opts + [f"-Xmx{JVM_MEM}", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+           [f"-Xmx{JVM_MEM}", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
             f"-Djava.io.tmpdir={work}/tmp", f"-Dspark.local.dir={work}/spark-local",
             f"-Dspark.sql.warehouse.dir={work}/warehouse", f"-Dderby.system.home={work}",
             "-cp", cp, "graftbench.Main"] + args + ["--work", work, "--out", out])
@@ -208,7 +178,7 @@ def load_spec(root):
 
 
 UNITS = {"live_low_p50_s": "s", "live_low_p99_s": "s", "live_high_p50_s": "s",
-         "live_high_p99_s": "s", "report_read_p50_s": "s", "report_read_p90_s": "s",
+         "live_high_p99_s": "s", "live_low_mean_s": "s", "live_high_mean_s": "s", "report_read_p50_s": "s", "report_read_p90_s": "s",
          "derive_s": "s", "drain_eps": "1/s", "q_cold_s": "s", "q_light_s": "s",
          "q_heavy_s": "s", "query_p50_s": "s", "query_p90_s": "s"}
 
@@ -262,13 +232,13 @@ def main():
     attempted, failed = int(res["attempted"]), int(res["failed"])
     e2e = dict(res["gate"])
     e2e["setup_s"] = res["setup_s"]
-    e2e["ok_share"] = (attempted - failed) / attempted if attempted else 0.0
     correct = not problems and attempted > 0
 
     # human-readable report: every named metric with its unit
     print(f"workload {a.workload}  seed {a.seed}  seconds {a.seconds}  trace {a.trace}")
     print(f"  attempted {attempted}  failed {failed}  failed_share "
           f"{failed / attempted if attempted else 0.0:.4f}")
+    print("  setup rounds " + "  ".join(f"{x:.3f}" for x in res["setup_rounds_s"]) + " s (setup_s is their median)")
     for k, v in sorted(res["named"].items()):
         print(f"  {k:<28} {v:12.4f} {UNITS.get(k, '')}")
     for m in spec["end_to_end"]:
@@ -281,7 +251,9 @@ def main():
 
     art_dir = os.path.join(out, "artifacts")
     os.makedirs(art_dir, exist_ok=True)
-    last_untraced = os.path.join(out, "last", f"{a.workload}.json")
+    # the untraced run a traced one is compared with: same workload and
+    # scale (a smoke run must not stand in for a full one)
+    last_untraced = os.path.join(out, "last", a.workload + ("-smoke" if a.smoke else "") + ".json")
     if a.trace:
         metrics = {}
         for m in spec["per_layer"]:
@@ -298,8 +270,9 @@ def main():
                 print(f"  [tracing overhead] {k:<18} {v:+10.4f} (traced minus last untraced run)")
         else:
             print("  [tracing overhead] no untraced run of this workload yet in this checkout")
-        if os.path.exists(os.path.join(work, "spans.jsonl")):
-            shutil.copy(os.path.join(work, "spans.jsonl"), os.path.join(art_dir, tag + ".spans.jsonl"))
+        for f, ext in (("spans.jsonl", ".spans.jsonl"), ("jvm.log", ".jvm.log")):
+            if os.path.exists(os.path.join(work, f)):
+                shutil.copy(os.path.join(work, f), os.path.join(art_dir, tag + ext))
     else:
         metrics = {m["name"]: {"value": e2e[m["name"]], "unit": m["unit"]} for m in spec["end_to_end"]}
         os.makedirs(os.path.dirname(last_untraced), exist_ok=True)
