@@ -19,18 +19,13 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      // RocksDB state store by DEFAULT for the production streaming
-      // pipeline: the fMGWS task/worker state machines key on every
-      // open task — at 100 TB that keyed state cannot live in the heap
-      // provider (executor OOM is the scale-killer; RocksDB spills to
-      // local disk with bounded block-cache memory). The heap provider
-      // remains available as an explicit override for tests
-      // (GRAFT_STATE_STORE=hdfs).
+      // RocksDB state store for the production streaming pipeline: the
+      // fMGWS task/worker state machines key on every open task — at
+      // 100 TB that keyed state cannot live in the heap provider
+      // (executor OOM is the scale-killer; RocksDB spills to local disk
+      // with bounded block-cache memory).
       .config("spark.sql.streaming.stateStore.providerClass",
-        if (sys.env.get("GRAFT_STATE_STORE").contains("hdfs"))
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        else
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

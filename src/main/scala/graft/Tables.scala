@@ -41,35 +41,15 @@ object Tables {
     * tables likewise stay single-file: 32-way tiny-file scans would
     * ADD per-file open cost to every join for no map-side work worth
     * spreading. */
-  private val FactTables =
-    Set("lineitem", "orders", "events", "documents", "embeddings")
   private val SpreadTables =
     Set("lineitem", "documents")
 
-  /** Dev-only dosage override for the relayout file count, consulted
-    * for every fact table: SPARK_GRAFT_SPREAD="lineitem=8,events=32"
-    * (unset in the driver contract — the measured default is
-    * [[SpreadTables]] at defaultParallelism, everything else
-    * unspread). */
-  private lazy val spreadOverride: Map[String, Int] =
-    sys.env.get("SPARK_GRAFT_SPREAD").map(_.split(',').toSeq.flatMap { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => scala.util.Try(k.trim -> v.trim.toInt).toOption
-        case _ => None
-      }
-    }.toMap).getOrElse(Map.empty)
-
-  private[graft] def spreadFiles(spark: SparkSession, name: String): Int =
-    spreadOverride.getOrElse(name,
-      if (SpreadTables(name)) spark.sparkContext.defaultParallelism else 1)
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (FactTables(name)) {
-      val files = spreadFiles(spark, name)
-      if (files <= 1) loadRaw(spark, dir, name)
-      else SessionCache.checkpointed(spark, s"tables.spread|$dir|$name|$files")(
+    val files = spark.sparkContext.defaultParallelism
+    if (SpreadTables(name) && files > 1)
+      SessionCache.checkpointed(spark, s"tables.spread|$dir|$name|$files")(
         loadRaw(spark, dir, name).repartition(files))
-    } else loadRaw(spark, dir, name)
+    else loadRaw(spark, dir, name)
   }
 
   /** The pre-relayout single-file scan, for the one order-sensitive

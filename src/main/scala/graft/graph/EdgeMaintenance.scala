@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.Publish
+
 /** Incremental maintenance of the stored co-occurrence edge table —
   * the graph analog of the r7 IVF index maintenance: at 100 TB the
   * canonical (src < dst) edge table is a persisted derived view of a
@@ -26,21 +28,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * side is semi-join-prunable (Bloom/DPP) to the touched-order slice
   * at scale.
   *
-  * Replay safety (single-writer maintenance job, like every
-  * table-maintenance path): the batch's delta is computed under
-  * `_staging/batch=<id>` (mode=overwrite — a retry rewrites only its
-  * own staging; `_`-prefixed dirs are invisible to parquet discovery),
-  * then ATOMICALLY published by renaming the staged directory to
-  * `<table>/batch-<id>`. A batch directory's existence IS the applied
-  * marker: a replay that finds it keeps it and discards its own
-  * recomputed staging — which matters because a replay that runs after
-  * the membership table was already updated recomputes an EMPTY delta,
-  * and any publish scheme that lets that empty result overwrite the
-  * original files loses edges. Publish order is edges first,
-  * membership second (the Compaction recovery-first ordering, r6): a
-  * crash between the two replays with membership unchanged, recomputes
-  * the same delta, finds `edges/batch-<id>` applied, and completes the
-  * membership publish — every interleaving converges.
+  * Each batch's delta is staged under `_staging/batch=<id>` and
+  * published with [[graft.sources.Publish.once]], edges first and
+  * membership second. A replay after the membership publish would
+  * recompute an EMPTY delta, so an existing batch dir must win over the
+  * replay; a crash between the two publishes replays with membership
+  * unchanged, recomputes the same delta, finds `edges/batch-<id>`
+  * applied and completes the membership publish.
   *
   * Reference analog: `routes/events.js:74-157` maintains its lookup
   * tables row-at-a-time on each arriving event; this is the same
@@ -104,31 +98,13 @@ object EdgeMaintenance {
       .join(storedEdges, Seq("src", "dst"), "left_anti")
       .write.mode("overwrite").parquet(s"$staging/edges")
 
-    // 3. atomic directory publish: edges first, membership second
-    publish(spark, s"$staging/edges", s"${edgesDir(path)}/batch-$batchId")
-    publish(spark, s"$staging/li", s"${liDir(path)}/batch-$batchId")
+    // 3. publish edges first, membership second (see the class doc)
+    Publish.once(spark, s"$staging/edges", s"${edgesDir(path)}/batch-$batchId")
+    Publish.once(spark, s"$staging/li", s"${liDir(path)}/batch-$batchId")
     val fs = new org.apache.hadoop.fs.Path(staging)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(staging), true)
     ()
-  }
-
-  /** Rename the staged dir to `dest` unless `dest` already exists —
-    * an existing batch dir is the applied marker and its (original)
-    * content wins over any replay's recomputation. */
-  private def publish(spark: SparkSession, staged: String, dest: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(staged)
-    val fs = src.getFileSystem(hconf)
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    if (fs.exists(destPath)) { fs.delete(src, true); () }
-    else {
-      // drop the _SUCCESS marker so recursive readers only see parquet
-      fs.delete(new org.apache.hadoop.fs.Path(src, "_SUCCESS"), false)
-      fs.mkdirs(destPath.getParent)
-      if (!fs.rename(src, destPath))
-        sys.error(s"edge merge publish failed: $src -> $dest")
-    }
   }
 
   /** Current canonical edge table. */

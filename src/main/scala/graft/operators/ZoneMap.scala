@@ -127,12 +127,11 @@ object ZoneMap {
   // The claim in [[buildManifest]]'s doc made real: at scale the
   // manifest is maintained at WRITE time — each appended batch lands
   // in its own dir, its file stats are computed from exactly the
-  // files it wrote, and the manifest grows by an idempotent published
-  // batch partial (the AggMaintenance/EdgeMaintenance protocol: stage
-  // under _staging/batch=<id>, rename to batch-<id>, dir existence is
-  // the applied marker). Readers fold the manifest log; a replayed
-  // batch discards its recomputation. Scan-based [[buildManifest]]
-  // remains the backfill path and the spec's rebuild baseline.
+  // files it wrote, and the manifest grows by one batch partial
+  // published with [[graft.sources.Publish.once]]. Readers fold the
+  // manifest log; a replayed batch is discarded. Scan-based
+  // [[buildManifest]] remains the backfill path and the spec's rebuild
+  // baseline.
 
   private def manifestDir(path: String) = s"$path/manifest"
 
@@ -141,13 +140,11 @@ object ZoneMap {
   def appendBatch(df: DataFrame, tablePath: String, zoneCol: String,
       batchId: Long): Unit = {
     val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
     val batchDir = s"$tablePath/data/batch=$batchId"
-    val bp = new org.apache.hadoop.fs.Path(batchDir)
-    val fs = bp.getFileSystem(hconf)
-    val dest = new org.apache.hadoop.fs.Path(
-      s"${manifestDir(tablePath)}/batch-$batchId")
-    if (fs.exists(dest)) return // applied marker: replay discarded
+    val dest = s"${manifestDir(tablePath)}/batch-$batchId"
+    val destPath = new org.apache.hadoop.fs.Path(dest)
+    if (destPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(destPath))
+      return // applied marker: replay discarded
     df.write.mode("overwrite").parquet(batchDir)
     val staging = s"$tablePath/_staging/batch=$batchId"
     spark.read.parquet(batchDir)
@@ -155,13 +152,7 @@ object ZoneMap {
       .agg(min(col(zoneCol)).as("zmin"), max(col(zoneCol)).as("zmax"),
         count(lit(1)).as("n_rows"))
       .coalesce(1).write.mode("overwrite").parquet(staging)
-    val src = new org.apache.hadoop.fs.Path(staging)
-    fs.delete(new org.apache.hadoop.fs.Path(src, "_SUCCESS"), false)
-    fs.mkdirs(dest.getParent)
-    if (!fs.rename(src, dest))
-      sys.error(s"zonemap manifest publish failed: $src -> $dest")
-    fs.delete(src, true)
-    ()
+    graft.sources.Publish.once(spark, staging, dest)
   }
 
   /** The maintained manifest: fold of the published batch partials. */

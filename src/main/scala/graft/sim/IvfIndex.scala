@@ -25,8 +25,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *  - the search plan scans ONLY inverted lists: probes join the index
   *    on the cell partition column, so Dynamic Partition Pruning skips
   *    unprobed cells at 100 TB;
-  *  - compaction is per-cell-directory, so maintenance parallelizes
-  *    over cells and never rewrites the whole index.
+  *  - compaction is per-cell-directory, so it never rewrites the
+  *    whole index.
   */
 object IvfIndex {
 
@@ -67,52 +67,18 @@ object IvfIndex {
       .write.mode("overwrite").partitionBy("cell").parquet(path)
 
   /** Incremental merge of one (micro-)batch keyed by a batch id,
-    * IDEMPOTENT under replay — the exactly-once story for an
-    * append-shaped sink (the MERGE sink gets it from upsert keys; a
-    * plain append must get it from the write protocol):
-    *
-    *  1. assign against the SAME stored centroids and write the batch
-    *     to `_staging/batch=<id>` with mode=overwrite (a retry rewrites
-    *     its own staging, never the index; `_`-prefixed dirs are
-    *     invisible to parquet discovery);
-    *  2. publish each staged cell file into the flat `cell=N` dirs
-    *     under a DETERMINISTIC name (`batch-<id>-part-<i>.parquet`) via
-    *     delete+rename — a replayed batch overwrites exactly its own
-    *     files, so any crash/retry interleaving converges to the
-    *     exactly-once layout. Single-writer maintenance job by design
-    *     (as any table-maintenance path is).
-    *
-    * The published layout is identical to [[rebuild]]'s, so readers,
-    * [[search]] and [[compactCell]] never see batch structure. */
+    * idempotent under replay: assign against the SAME stored centroids,
+    * stage under `_staging/batch=<id>` and publish with
+    * [[graft.sources.Publish.files]]. The published layout is identical
+    * to [[rebuild]]'s, so readers, [[search]] and [[compactCell]] never
+    * see batch structure. */
   def mergeBatch(batch: DataFrame, cents: DataFrame, path: String,
       batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val staging = s"$path/_staging/batch=$batchId"
     assignCells(batch, cents)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(hconf)
-    if (fs.exists(stagingPath)) {
-      fs.listStatus(stagingPath)
-        .filter(_.getPath.getName.startsWith("cell="))
-        .foreach { cellDir =>
-          val dest = new org.apache.hadoop.fs.Path(path, cellDir.getPath.getName)
-          fs.mkdirs(dest)
-          fs.listStatus(cellDir.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName).zipWithIndex
-            .foreach { case (f, i) =>
-              val target = new org.apache.hadoop.fs.Path(
-                dest, s"batch-$batchId-part-$i.parquet")
-              fs.delete(target, false) // republish: overwrite own prior file
-              if (!fs.rename(f.getPath, target))
-                sys.error(s"IVF merge publish failed: ${f.getPath} -> $target")
-            }
-        }
-      fs.delete(stagingPath, true)
-    }
+    graft.sources.Publish.files(batch.sparkSession, staging, path, batchId)
   }
 
   /** Attach the maintenance sink to a stream of new vectors
@@ -128,8 +94,8 @@ object IvfIndex {
       .start()
 
   /** Compact one cell's inverted-list directory (small files from many
-    * micro-batches → ~target-sized files); content-preserving, atomic
-    * swap, per `sources.Compaction`. Returns (filesBefore, filesAfter). */
+    * micro-batches → ~target-sized files) with `sources.Compaction`.
+    * Returns (filesBefore, filesAfter). */
   def compactCell(spark: SparkSession, path: String, cell: Long,
       targetBytes: Long = 128L << 20): (Int, Int) =
     graft.sources.Compaction.compact(spark, s"$path/cell=$cell", targetBytes)

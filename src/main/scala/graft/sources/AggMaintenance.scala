@@ -17,15 +17,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * simply re-reads its whole in-memory table per render
   * (routes/index.js:9-10).
   *
-  * Replay safety follows the EdgeMaintenance protocol: a batch's
-  * partial is computed under an invisible `_staging/batch=<id>` dir
-  * and ATOMICALLY renamed to `partials/batch-<id>`; the batch dir's
-  * existence is the applied marker, so a replayed batch discards its
-  * recomputation instead of double-counting (additive partials make
-  * double-publish CORRUPTION, not just waste — the marker is
-  * load-bearing here). [[compact]] uses the Compaction swap with
-  * recovery-first ordering. Single-writer maintenance job, like every
-  * table-maintenance path in this repo.
+  * Each batch's partial is published with [[Publish.once]] as
+  * `partials/batch-<id>` (a replay must not double-count additive
+  * partials), and [[compact]] replaces the partial log with
+  * [[Publish.swap]].
   */
 object AggMaintenance {
 
@@ -57,25 +52,9 @@ object AggMaintenance {
 
   /** Merge one batch of fact rows, idempotent per batch id. */
   def mergeBatch(batch: DataFrame, path: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
     val staging = s"$path/_staging/batch=$batchId"
     partials(batch).write.mode("overwrite").parquet(staging)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(staging)
-    val fs = src.getFileSystem(hconf)
-    val dest = new org.apache.hadoop.fs.Path(
-      s"${partialsDir(path)}/batch-$batchId")
-    if (fs.exists(dest)) { fs.delete(src, true); () }
-    else {
-      fs.delete(new org.apache.hadoop.fs.Path(src, "_SUCCESS"), false)
-      fs.mkdirs(dest.getParent)
-      if (!fs.rename(src, dest))
-        sys.error(s"agg merge publish failed: $src -> $dest")
-    }
-    // clean up only THIS batch's staging dir — deleting the _staging
-    // root would wipe a concurrently-staged batch's in-flight dir
-    fs.delete(src, true)
-    ()
+    Publish.once(batch.sparkSession, staging, s"${partialsDir(path)}/batch-$batchId")
   }
 
   /** The current aggregate: fold the partial log with one tiny
@@ -87,27 +66,12 @@ object AggMaintenance {
         sum(col("revenue_cents")).as("revenue_cents"))
 
   /** Collapse the partial log into a single base dir (run when the
-    * batch-dir count grows): Compaction's atomic swap with the
-    * recovery-first ordering — if the partials dir is missing and
-    * `_old` exists, a previous compaction crashed mid-swap and `_old`
-    * holds the only copy; restore it BEFORE anything else. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(partialsDir(path))
-    val fs = p.getFileSystem(hconf)
-    val old = new org.apache.hadoop.fs.Path(s"$path/_old")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/_compact-tmp")
-    if (!fs.exists(p) && fs.exists(old)) {
-      if (!fs.rename(old, p)) sys.error(s"agg crash recovery failed: $old -> $p")
+    * batch-dir count grows). */
+  def compact(spark: SparkSession, path: String): Unit =
+    Publish.swap(spark, path, Seq("partials")) { staged =>
+      read(spark, path).coalesce(1).write.mode("overwrite")
+        .parquet(s"$staged/partials/base")
     }
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    read(spark, path).coalesce(1).write.mode("overwrite")
-      .parquet(s"$tmp/base")
-    if (!fs.rename(p, old)) sys.error(s"agg compaction swap failed: $p -> $old")
-    if (!fs.rename(tmp, p)) { fs.rename(old, p); sys.error(s"swap failed: $tmp -> $p") }
-    fs.delete(old, true)
-  }
 
   /** Streaming maintenance: each micro-batch of fact rows lands as one
     * partial via the same idempotent mergeBatch — foreachBatch retries

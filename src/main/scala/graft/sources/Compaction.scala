@@ -10,12 +10,13 @@ import org.apache.spark.sql.SparkSession
   * rewrites a directory into ~target-sized files.
   *
   * Shape at scale: ONE round-robin repartition shuffle sized from the
-  * actual byte count (ceil(bytes/target) output files), then an atomic
-  * directory swap — readers see the old files or the new files, never
-  * a mix. Runs per partition directory (date=..., bucket=...), so a
-  * 100 TB table compacts incrementally, newest partitions first, and
-  * the job parallelizes over partitions. Content is preserved
-  * bit-for-bit (same rows, any order) — CompactionSpec asserts it.
+  * actual byte count (ceil(bytes/target) output files), published with
+  * [[Publish.swap]] — readers see the old files or the new files, never
+  * a mix, and the staged copy stays invisible to partition discovery.
+  * Runs per partition directory (date=..., bucket=...), so a 100 TB
+  * table compacts incrementally, newest partitions first. Content is
+  * preserved bit-for-bit (same rows, any order) — CompactionSpec
+  * asserts it.
   */
 object Compaction {
 
@@ -32,34 +33,14 @@ object Compaction {
       targetBytes: Long = 128L << 20): (Int, Int) = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + ".compact-tmp")
-    val old = new Path(dir + ".compact-old")
-    // Crash recovery FIRST — before anything lists `p`. The swap
-    // sequence is: write tmp -> rename live to old -> rename tmp to
-    // live -> delete old. If a prior run died BETWEEN the renames, the
-    // live dir does not exist and the original data exists only under
-    // `old` (plus a compacted copy under tmp): restore it before
-    // listing (listStatus on the missing live dir would throw and make
-    // the directory unreadable until manual repair) — and deleting
-    // `old` unconditionally would destroy the only copy. In every
-    // other crash window the live dir is intact and both leftovers
-    // are stale.
-    if (!fs.exists(p) && fs.exists(old)) {
-      if (!fs.rename(old, p)) sys.error(s"crash recovery failed: $old -> $p")
+    val before = Publish.swap(spark, p.getParent.toString, Seq(p.getName)) { staged =>
+      val files = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
+      val totalBytes = files.map(_.getLen).sum
+      val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
+      spark.read.parquet(dir).repartition(nOut)
+        .write.mode("overwrite").parquet(s"$staged/${p.getName}")
+      files.length
     }
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-
-    val files = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-    val before = files.length
-    val totalBytes = files.map(_.getLen).sum
-    val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(dir).repartition(nOut)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // atomic swap: live dir -> old, tmp -> live, drop old
-    if (!fs.rename(p, old)) sys.error(s"compaction swap failed: $p -> $old")
-    if (!fs.rename(tmp, p)) { fs.rename(old, p); sys.error(s"swap failed: $tmp -> $p") }
-    fs.delete(old, true)
     (before, parquetFileCount(spark, dir))
   }
 }

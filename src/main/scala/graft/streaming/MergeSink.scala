@@ -1,97 +1,55 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-/** Incremental MERGE-by-uuid sink for the segment changelog — the
+import graft.sources.Publish
+
+/** Incremental MERGE sink behind the two tables `GET /` reads — the
   * streaming equivalent of the reference's update-in-place tables
-  * (routes/events.js:298-315, :225-256): `GET /` can read the latest
-  * state at any moment without re-aggregating an ever-growing
+  * (routes/events.js:298-315, :225-256): the report can read the
+  * latest state at any moment without re-aggregating an ever-growing
   * changelog.
   *
-  * Each micro-batch folds its delta into a persisted latest-segments
-  * table keyed by uuid:
+  * Each micro-batch folds its delta into a persisted table keyed by
+  * one column and hash-partitioned by a 2-hex-char prefix (`uuid_p`):
   *
-  *  1. reduce the batch to its per-uuid winner (max emit_seq) — a
-  *     map-side-combined aggregation over the DELTA only;
-  *  2. read back ONLY the table partitions the delta touches (the
-  *     table is hash-partitioned by a 2-hex-char uuid prefix, so
-  *     partition pruning skips everything else);
-  *  3. last-write-wins per uuid between existing rows and delta;
-  *  4. dynamic partition overwrite rewrites just the touched
-  *     partitions.
+  *  1. reduce the batch to its per-key delta — a map-side-combined
+  *     aggregation over the DELTA only;
+  *  2. read back ONLY the table partitions the delta touches
+  *     (partition pruning skips everything else);
+  *  3. pick each key's winner over existing rows and delta;
+  *  4. stage the merged touched partitions and swap each into place
+  *     with [[Publish.swap]].
   *
   * Per-batch work is O(|delta| + |touched partitions|), independent of
   * changelog history length — the property `latestSegments` over the
   * full changelog lacks. On a lakehouse table format this step is
   * literally `MERGE INTO latest USING delta ON uuid` with file-level
   * pruning; the partitioned-parquet form here is the same algorithm
-  * expressed against plain files. Deterministic uuids (sha2 seeds) make
-  * the merge idempotent: replaying a batch converges to the same table.
+  * expressed against plain files.
+  *
+  * Replay converges after a crash at any point: the winner is
+  * idempotent (deterministic keys, last-write-wins), and the swap
+  * restores a partition a crashed batch moved aside before the replay
+  * reads it. What it does not give is snapshot isolation: a reader
+  * that lists files during a merge can still hit FILE_NOT_EXIST when a
+  * partition it listed is swapped out (perfbench/README.md, "Known
+  * behaviour").
   */
 object MergeSink {
 
   private val PartCol = "uuid_p"
 
-  private val probe = sys.env.get("GRAFT_MERGE_PROBE").contains("true")
-  private def ptime[A](label: String)(f: => A): A =
-    if (!probe) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[merge-probe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  /** Fold one changelog delta into the latest-segments table. */
+  /** Fold one changelog delta into the latest-segments table; the
+    * winner per uuid is its row with the largest emit_seq. */
   def mergeBatch(spark: SparkSession, tablePath: String, batch: DataFrame): Unit = {
-    val dataCols = batch.columns // segment columns + emit_seq
-    // per-uuid winner within the delta. Checkpoint FIRST, emptiness
-    // check after: inside foreachBatch every action on `batch`
-    // re-executes the upstream micro-batch plan (the whole parse +
-    // state-machine pipeline), so a separate batch.isEmpty probe
-    // doubled the per-batch cost; on the checkpointed delta it's free.
-    val delta = ptime("delta checkpoint")(batch
-      .groupBy(col("uuid"))
-      .agg(max_by(struct(dataCols.filter(_ != "uuid").map(col): _*),
-        col("emit_seq")).as("r"))
-      .select(Seq(col("uuid")) ++ dataCols.filter(_ != "uuid").map(n => col(s"r.$n").as(n)): _*)
-      .withColumn(PartCol, substring(col("uuid"), 1, 2))
-      .localCheckpoint()) // small; also frees the self-overwrite path check below
-
-    // one job answers both "is the delta empty?" and "which partitions
-    // does it touch?" — the separate isEmpty probe was a per-batch job
-    // for information the touched-set collect already carries
-    val touched = ptime("touched collect")(delta.select(PartCol).distinct()
-      .collect().map(_.getString(0)).toSeq)
-    if (touched.isEmpty) return
-
-    val existing =
-      if (new java.io.File(tablePath).exists())
-        spark.read.parquet(tablePath)
-          .filter(col(PartCol).isin(touched: _*)) // partition-pruned scan
-          .select(delta.columns.map(col): _*)
-      else delta.limit(0)
-
-    val merged = ptime("merged checkpoint")(existing.unionByName(delta)
-      .groupBy(col("uuid"))
-      .agg(max_by(struct(delta.columns.filter(_ != "uuid").map(col): _*),
-        col("emit_seq")).as("r"))
-      .select(Seq(col("uuid")) ++ delta.columns.filter(_ != "uuid").map(n => col(s"r.$n").as(n)): _*)
-      // cluster by the partition column BEFORE the partitioned write:
-      // without this every shuffle task holds ~every uuid prefix and
-      // the dynamic overwrite fans out to tasks × partitions tiny
-      // files (measured 8192/batch at sf0.1); clustered, each
-      // partition directory gets exactly one file
-      .repartition(col(PartCol))
-      // truncate lineage so the write below isn't "overwriting a path
-      // being read from" (merged is bounded by the touched partitions)
-      .localCheckpoint())
-
-    ptime("overwrite write")(merged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(PartCol)
-      .parquet(tablePath))
+    val latest: Seq[String] => Column =
+      cols => max_by(struct(cols.map(col): _*), col("emit_seq"))
+    upsert(spark, tablePath, pick(batch, "uuid", latest), "uuid",
+      substring(col("uuid"), 1, 2), latest)
   }
 
   /** Start the changelog stream into an incrementally-merged
@@ -122,42 +80,17 @@ object MergeSink {
     * by (ts_us, event_id)) event, whose key is persisted alongside the
     * row — so re-running the same min/max_by over (existing ∪ delta)
     * IS the MERGE, batch-boundary-independent by construction. */
-  def mergeAgents(spark: SparkSession, tablePath: String, parsedBatch: DataFrame): Unit = {
-    val delta0 = graft.taskrouter.Derivation.agentsKeyed(parsedBatch)
-    val delta = delta0
-      .withColumn(PartCol, substring(md5(col("agent_uuid").cast("binary")), 1, 2))
-      .localCheckpoint()
-
-    // same single-job emptiness + touched-set read as mergeBatch
-    val touched = delta.select(PartCol).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (touched.isEmpty) return // no worker events in this batch
-    val existing =
-      if (new java.io.File(tablePath).exists())
-        spark.read.parquet(tablePath)
-          .filter(col(PartCol).isin(touched: _*))
-          .select(delta.columns.map(col): _*)
-      else delta.limit(0)
-
-    val restCols = delta.columns.filterNot(c =>
-      c == "agent_uuid" || c == "date_joined")
-    val merged = existing.unionByName(delta)
-      .groupBy(col("agent_uuid"))
-      .agg(min(col("date_joined")).as("date_joined"),
-        max_by(struct(restCols.map(col): _*),
-          struct(col("last_ts_us"), col("last_event_id"))).as("w"))
-      .select(Seq(col("agent_uuid"), col("date_joined")) ++
-        restCols.map(n => col(s"w.$n").as(n)): _*)
-      .select(delta.columns.map(col): _*)
-      .repartition(col(PartCol)) // one file per partition dir, not tasks × dirs
-      .localCheckpoint()
-
-    merged.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(PartCol)
-      .parquet(tablePath)
-  }
+  def mergeAgents(spark: SparkSession, tablePath: String, parsedBatch: DataFrame): Unit =
+    upsert(spark, tablePath, graft.taskrouter.Derivation.agentsKeyed(parsedBatch),
+      "agent_uuid", substring(md5(col("agent_uuid").cast("binary")), 1, 2),
+      cols => {
+        val last = max_by(struct(cols.filter(_ != "date_joined").map(col): _*),
+          struct(col("last_ts_us"), col("last_event_id")))
+        struct(cols.map {
+          case "date_joined" => min(col("date_joined")).as("date_joined")
+          case c => last(c).as(c)
+        }: _*)
+      })
 
   /** Stream PARSED events into an incrementally-merged agents table. */
   def startAgents(parsed: DataFrame, tablePath: String, checkpointDir: String,
@@ -175,4 +108,65 @@ object MergeSink {
   def readAgents(spark: SparkSession, tablePath: String): DataFrame =
     spark.read.parquet(tablePath)
       .select(graft.taskrouter.Model.agentColumns.map(col): _*)
+
+  // ---------------------------------------------------------------
+
+  /** One row per `key`: `winner` maps the other column names to an
+    * aggregate struct holding each of them. Columns keep their order
+    * when `key` comes first. */
+  private def pick(df: DataFrame, key: String, winner: Seq[String] => Column): DataFrame = {
+    val cols = df.columns.filter(_ != key).toSeq
+    df.groupBy(col(key)).agg(winner(cols).as("w"))
+      .select(col(key) +: cols.map(n => col(s"w.$n").as(n)): _*)
+  }
+
+  /** Upsert a per-key delta into the table at `tablePath`, partitioned
+    * by `part` (a function of `key`). Exactly four Spark actions per
+    * non-empty batch, in this order: delta checkpoint, touched-set
+    * collect, merged checkpoint, one parquet write. */
+  private def upsert(spark: SparkSession, tablePath: String, rows: DataFrame,
+      key: String, part: Column, winner: Seq[String] => Column): Unit = {
+    // Checkpoint FIRST, emptiness check after: inside foreachBatch
+    // every action on the batch re-executes the upstream micro-batch
+    // plan (the whole parse + state-machine pipeline), so a separate
+    // isEmpty probe doubled the per-batch cost; on the checkpointed
+    // delta it's free.
+    val delta = rows.withColumn(PartCol, part).localCheckpoint()
+
+    // one job answers both "is the delta empty?" and "which partitions
+    // does it touch?"
+    val touched = delta.select(PartCol).distinct()
+      .collect().map(_.getString(0)).toSeq
+    if (touched.isEmpty) return
+
+    Publish.swap(spark, tablePath, touched.map(p => s"$PartCol=$p")) { staged =>
+      val existing =
+        if (hasPartitions(spark, tablePath))
+          spark.read.parquet(tablePath)
+            .filter(col(PartCol).isin(touched: _*)) // partition-pruned scan
+            .select(delta.columns.map(col): _*)
+        else delta.limit(0)
+      pick(existing.unionByName(delta), key, winner)
+        // cluster by the partition column BEFORE the partitioned write:
+        // without this every shuffle task holds ~every uuid prefix and
+        // the write fans out to tasks × partitions tiny files (measured
+        // 8192/batch at sf0.1); clustered, each partition directory
+        // gets exactly one file
+        .repartition(col(PartCol))
+        // The staged write reads nothing it replaces, so this guards no
+        // self-overwrite; whether dropping it pays is to be measured on
+        // the `live` benchmark, whose merge phases assume it.
+        .localCheckpoint()
+        .write.mode("overwrite").partitionBy(PartCol).parquet(staged)
+    }
+  }
+
+  /** Whether the table holds a partition yet: a crash during the very
+    * first batch leaves only hidden staging, which `spark.read.parquet`
+    * cannot infer a schema from. */
+  private def hasPartitions(spark: SparkSession, tablePath: String): Boolean = {
+    val parts = new Path(tablePath, s"$PartCol=*")
+    Option(parts.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(parts))
+      .exists(_.nonEmpty)
+  }
 }

@@ -7,9 +7,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Stored inverted text index with incremental maintenance — the
   * text-retrieval twin of [[graft.sim.IvfIndex]]: postings live as a
   * parquet directory PARTITIONED BY token-hash bucket, new-document
-  * batches merge idempotently (same staging → deterministic-name
-  * publish protocol), and BM25 search scans ONLY the buckets of the
-  * query's terms.
+  * batches merge idempotently (`sources.Publish.files`), and BM25
+  * search scans ONLY the buckets of the query's terms.
   *
   * Invariant (InvertedIndexSpec): search-after-merge ≡ search-over-
   * rebuilt-index — tokenization and layout are shared by both paths
@@ -70,52 +69,16 @@ object InvertedIndex {
   }
 
   /** Incremental merge of one new-documents batch keyed by batch id,
-    * IDEMPOTENT under replay — the same write protocol as
-    * [[graft.sim.IvfIndex.mergeBatch]]: stage under `_staging/batch=N`
-    * (invisible to parquet discovery, retries rewrite only staging),
-    * then publish every staged file under a DETERMINISTIC
-    * `batch-<id>-part-<i>` name via delete+rename so a replayed batch
-    * overwrites exactly its own files. Single-writer maintenance job
-    * by design. */
+    * idempotent under replay: postings and doc lengths are staged under
+    * `_staging/batch=<id>` and published with
+    * [[graft.sources.Publish.files]]. */
   def mergeBatch(docs: DataFrame, path: String, batchId: Long): Unit = {
-    val spark = docs.sparkSession
     val staging = s"$path/_staging/batch=$batchId"
     postingsOf(docs).repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$staging/postings")
     doclensOf(docs)
       .write.mode("overwrite").parquet(s"$staging/doclens")
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stagingPath.getFileSystem(hconf)
-    def publish(srcDir: org.apache.hadoop.fs.Path,
-        destDir: org.apache.hadoop.fs.Path): Unit = {
-      fs.mkdirs(destDir)
-      fs.listStatus(srcDir)
-        .filter(_.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName).zipWithIndex
-        .foreach { case (f, i) =>
-          val target = new org.apache.hadoop.fs.Path(
-            destDir, s"batch-$batchId-part-$i.parquet")
-          fs.delete(target, false) // republish: overwrite own prior file
-          if (!fs.rename(f.getPath, target))
-            sys.error(s"index merge publish failed: ${f.getPath} -> $target")
-        }
-    }
-    if (fs.exists(stagingPath)) {
-      val stagedPostings = new org.apache.hadoop.fs.Path(s"$staging/postings")
-      if (fs.exists(stagedPostings)) {
-        fs.listStatus(stagedPostings)
-          .filter(_.getPath.getName.startsWith("bucket="))
-          .foreach { bDir =>
-            publish(bDir.getPath,
-              new org.apache.hadoop.fs.Path(s"$path/postings", bDir.getPath.getName))
-          }
-      }
-      val stagedDls = new org.apache.hadoop.fs.Path(s"$staging/doclens")
-      if (fs.exists(stagedDls))
-        publish(stagedDls, new org.apache.hadoop.fs.Path(s"$path/doclens"))
-      fs.delete(stagingPath, true)
-    }
+    graft.sources.Publish.files(docs.sparkSession, staging, path, batchId)
   }
 
   /** Attach the maintenance sink to a stream of new documents
@@ -130,8 +93,8 @@ object InvertedIndex {
       }
       .start()
 
-  /** Compact one bucket's postings directory; content-preserving,
-    * atomic swap, per `sources.Compaction`. */
+  /** Compact one bucket's postings directory with
+    * `sources.Compaction`. */
   def compactBucket(spark: SparkSession, path: String, bucket: Long,
       targetBytes: Long = 128L << 20): (Int, Int) =
     graft.sources.Compaction.compact(

@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.hadoop.fs.Path
-
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.graph.EdgeMaintenance
+import graft.operators.ZoneMap
+import graft.sim.IvfIndex
 import graft.sources.AggMaintenance
+import graft.streaming.{MergeSink, StreamingPipeline}
+import graft.taskrouter.{Ingest, Synth}
+import graft.text.InvertedIndex
 
-/** Crash-MID-publish convergence for the two newest maintenance sinks
-  * (VERDICT r7 item 7): a job killed between the staging write and the
-  * directory publish — or between the two publishes of a two-table
-  * sink — must converge to the rebuilt-from-scratch table when the
+/** Crash-MID-publish convergence for the maintained tables: a job
+  * killed between the staging write and the publish — between the two
+  * publishes of a two-table sink, or in the middle of a MERGE sink's
+  * partition swap — must converge to the uncrashed table when the
   * batch replays. Torn states are planted by running the real merge
   * and then deleting/retaining exactly what the crash window leaves. */
 class TornPublishSpec extends SparkSpec {
@@ -51,29 +56,17 @@ class TornPublishSpec extends SparkSpec {
     assert(aggRows(p) == want)
   }
 
-  test("agg: publish cleans only its own staging dir (concurrent batch survives)") {
-    val o = Tables.load(spark, sf0001, "orders")
-    val p = tmp("agg_concurrent")
-    AggMaintenance.rebuild(o.filter($"o_orderkey" % 3 === 0), p)
-    // another maintenance job has batch 99 in flight
-    val foreign = new Path(s"$p/_staging/batch=99")
-    fs.mkdirs(foreign)
-    Seq((1L, 2L)).toDF("a", "b").write.mode("overwrite")
-      .parquet(s"$p/_staging/batch=99/data")
-    AggMaintenance.mergeBatch(o.filter($"o_orderkey" % 3 === 1), p, 1L)
-    assert(fs.exists(foreign),
-      "mergeBatch deleted a concurrent batch's in-flight staging dir")
-  }
-
   test("agg: compaction crash mid-swap recovers from _old on next run") {
     val o = Tables.load(spark, sf0001, "orders")
     val p = tmp("agg_swapcrash")
     AggMaintenance.rebuild(o.filter($"o_orderkey" % 3 === 0), p)
     AggMaintenance.mergeBatch(o.filter($"o_orderkey" % 3 =!= 0), p, 1L)
     val want = aggRows(p)
-    // crash window: partials renamed to _old, died before tmp→partials
-    assert(fs.rename(new Path(s"$p/partials"), new Path(s"$p/_old")))
-    // next compact must restore _old FIRST (it holds the only copy)
+    // crash window: partials moved to the backup, died before the
+    // staged copy replaced it
+    fs.mkdirs(new Path(s"$p/_old"))
+    assert(fs.rename(new Path(s"$p/partials"), new Path(s"$p/_old/partials")))
+    // next compact must restore the backup FIRST (it holds the only copy)
     AggMaintenance.compact(spark, p)
     assert(aggRows(p) == want)
     assert(!fs.exists(new Path(s"$p/_old")))
@@ -126,5 +119,108 @@ class TornPublishSpec extends SparkSpec {
     assert(edgeSet(p) == bruteEdges(fixture))
     // multiset check: no edge row duplicated by the replay
     assert(EdgeMaintenance.edges(spark, p).count() == bruteEdges(fixture).size)
+  }
+
+  // --- every once / files caller --------------------------------------
+
+  test("once/files publish cleans only its own staging dir, for every caller") {
+    val o = Tables.load(spark, sf0001, "orders")
+    val li = fixture.toDF("l_orderkey", "l_partkey")
+    val vecs = Seq(1L, 2L, 3L).toDF("vec_id")
+      .withColumn("nv", expr("array(cast(vec_id as double), 0D)"))
+    val cents = Seq((0L, Seq(0.0, 0.0)), (1L, Seq(3.0, 0.0))).toDF("cell", "centv")
+    val docs = Seq((1L, "a b c"), (2L, "b c d")).toDF("doc_id", "text")
+    // (caller, set-up, batch-1 merge)
+    val callers: Seq[(String, String => Unit, String => Unit)] = Seq(
+      ("agg", AggMaintenance.rebuild(o.filter($"o_orderkey" % 3 === 0), _),
+        AggMaintenance.mergeBatch(o.filter($"o_orderkey" % 3 === 1), _, 1L)),
+      ("edges", EdgeMaintenance.rebuild(li.filter($"l_partkey" % 3 === 0), _),
+        EdgeMaintenance.mergeBatch(li.filter($"l_partkey" % 3 === 1), _, 1L)),
+      ("zonemap", _ => (), ZoneMap.appendBatch(o, _, "o_orderdate", 1L)),
+      ("ivf", IvfIndex.rebuild(vecs.limit(1), cents, _),
+        IvfIndex.mergeBatch(vecs, cents, _, 1L)),
+      ("inverted", InvertedIndex.rebuild(docs.limit(1), _),
+        InvertedIndex.mergeBatch(docs, _, 1L)))
+    callers.foreach { case (name, setUp, merge) =>
+      val p = tmp(s"concurrent_$name")
+      setUp(p)
+      // another maintenance job has batch 99 in flight
+      val foreign = new Path(s"$p/_staging/batch=99")
+      Seq((1L, 2L)).toDF("a", "b").write.mode("overwrite").parquet(s"$foreign/data")
+      merge(p)
+      assert(fs.exists(foreign),
+        s"$name deleted a concurrent batch's in-flight staging dir")
+      assert(!fs.exists(new Path(s"$p/_staging/batch=1")),
+        s"$name left its own staging dir behind")
+    }
+  }
+
+  // --- MergeSink -----------------------------------------------------
+
+  private lazy val parsed =
+    Ingest.parse(Synth.cloudEvents(spark, sf0001)).localCheckpoint()
+
+  /** Earlier and later half of `df` by the time column `c`. */
+  private def halves(df: DataFrame, c: String): (DataFrame, DataFrame) = {
+    val mid = df.stat.approxQuantile(c, Array(0.5), 0.0).head
+    (df.filter(col(c) < mid), df.filter(col(c) >= mid))
+  }
+
+  private def partitions(table: String): Set[String] =
+    fs.listStatus(new Path(table)).map(_.getPath.getName)
+      .filter(_.startsWith("uuid_p=")).toSet
+
+  /** Merge `b1` then `b2` into a fresh table, each replayed after the
+    * crash its first attempt left: `b1`, the very first batch, died
+    * after staging its partitions (the table directory holds only
+    * staging); `b2` died mid-swap, after moving a partition it touches
+    * aside and before publishing its replacement. */
+  private def crashAndReplay(name: String, b1: DataFrame, b2: DataFrame,
+      merge: (String, DataFrame) => Unit): String = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val t = tmp(name)
+    // b2's partitions, as staged by a merge of b2 alone
+    val staged = tmp(s"${name}_b2_alone")
+    merge(staged, b2)
+    def plantStaging(): Unit = {
+      assert(FileUtil.copy(fs, new Path(staged), fs, new Path(s"$t/_new"), false, hconf))
+      ()
+    }
+
+    plantStaging()
+    merge(t, b1)
+
+    val part = (partitions(t) intersect partitions(staged)).min
+    plantStaging()
+    fs.mkdirs(new Path(s"$t/_old"))
+    assert(fs.rename(new Path(s"$t/$part"), new Path(s"$t/_old/$part")))
+    merge(t, b2)
+    t
+  }
+
+  /** Same rows as the uncrashed table, and no staging or backup left. */
+  private def assertConverged(got: String, want: String, read: String => DataFrame): Unit = {
+    def rows(t: String) = read(t).collect().map(_.toString).toSeq.sorted
+    assert(rows(got) == rows(want))
+    assert(!fs.exists(new Path(s"$got/_new")) && !fs.exists(new Path(s"$got/_old")))
+  }
+
+  test("segments MERGE: crashes in the first batch and mid-swap converge on replay") {
+    val changelog = StreamingPipeline.segmentsChangelog(spark, parsed).localCheckpoint()
+    val (b1, b2) = halves(changelog, "emit_seq")
+    val merge = (p: String, b: DataFrame) => MergeSink.mergeBatch(spark, p, b)
+    val single = tmp("merge_seg_single")
+    merge(single, changelog)
+    val got = crashAndReplay("merge_seg", b1, b2, merge)
+    assertConverged(got, single, MergeSink.read(spark, _))
+  }
+
+  test("agents MERGE: crashes in the first batch and mid-swap converge on replay") {
+    val (b1, b2) = halves(parsed, "ts_us")
+    val merge = (p: String, b: DataFrame) => MergeSink.mergeAgents(spark, p, b)
+    val single = tmp("merge_agents_single")
+    merge(single, parsed)
+    val got = crashAndReplay("merge_agents", b1, b2, merge)
+    assertConverged(got, single, MergeSink.readAgents(spark, _))
   }
 }
