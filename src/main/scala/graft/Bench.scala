@@ -14,6 +14,18 @@ object Bench {
   private[graft] def num(v: Double, prec: Int): String =
     String.format(java.util.Locale.ROOT, "%." + prec + "f", Double.box(v))
 
+  /** Where a run's full summary (every per-query wall) is written. */
+  private[graft] val SummaryPath = "target/bench_summary.json"
+
+  /** The last stdout line of a run: the per-query `total` line runs to
+    * kilobytes, past any short tail capture, so the totals a tail
+    * parser needs ride a line of bounded length that points at the
+    * full summary. `sf` is the data directory's name (`sf0.1`), not its
+    * path, which keeps the line short wherever the data lives. */
+  private[graft] def totalsLine(total: Double, nQueries: Int, nFailed: Int,
+      sfDir: String): String =
+    s"""{"metric":"bench_totals","total":${num(total, 3)},"unit":"sec","n_queries":$nQueries,"n_failed":$nFailed,"sf":"${new java.io.File(sfDir).getName}","summary":"$SummaryPath"}"""
+
   /** The per-query load-annotation rule: a cell is flagged when its
     * wall exceeds 3x its BENCH_HISTORY median (floored at 1 s — sub-
     * second cells jitter 3x on scheduler noise alone), or 2 s flat for
@@ -495,16 +507,14 @@ object Bench {
     // summary, immune to any stdout tail-capture convention.
     val artifact =
       s"""{"summary":$summary,"queries":$qs,"stream_batches":$batchesJson,"load_windows":$loadWindowsJson,"query_loads":$queryLoadsJson}"""
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("target", "bench_summary.json"),
+    java.nio.file.Files.write(java.nio.file.Paths.get(SummaryPath),
       artifact.getBytes("UTF-8"))
     // The driver-contract line — the ONE JSON line with the per-query
-    // map — is emitted LAST (VERDICT r15 item 2): the driver tail-
-    // parses stdout for it, and printing it before the summary lines
-    // scrolled it out of the capture window every round r11–r15
-    // (BENCH_r*.json "parsed": null). Same line, same fields, same
-    // timing methodology — only the print position changed.
+    // map — comes after every other summary line, followed only by the
+    // short totals line, which a tail capture of a few hundred chars
+    // still holds whole.
     println(s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    println(totalsLine(total, selected.size, failed.size, sfDir))
     System.out.flush()
     spark.stop()
   }

@@ -983,7 +983,7 @@ object Similarity {
     var selected = argmax(
       scored.withColumn("score", $"rel_e6" * 7), 1).localCheckpoint()
     for (r <- 2 to MmrK) {
-      val selVecs = selected.select($"query_id", $"cand_id".as("sel_id"))
+      val selVecs = broadcast(selected.select($"query_id", $"cand_id".as("sel_id")))
         .join(c.withColumnRenamed("cand_id", "sel_id")
           .withColumnRenamed("cv", "sv"), Seq("sel_id"))
       val pen = scored

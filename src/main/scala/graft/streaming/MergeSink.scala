@@ -18,18 +18,21 @@ import graft.sources.Publish
   *
   *  1. reduce the batch to its per-key delta — a map-side-combined
   *     aggregation over the DELTA only;
-  *  2. read back ONLY the table partitions the delta touches
-  *     (partition pruning skips everything else);
+  *  2. read back ONLY the table partitions the delta touches: their
+  *     directories are named in the read, so listing covers the
+  *     touched partitions and nothing else, and the read takes the
+  *     delta's schema (no footer inference; `uuid_p` stays a string
+  *     even when every existing prefix is all digits);
   *  3. pick each key's winner over existing rows and delta;
   *  4. stage the merged touched partitions and swap each into place
   *     with [[Publish.swap]].
   *
-  * Per-batch work is O(|delta| + |touched partitions|), independent of
-  * changelog history length — the property `latestSegments` over the
-  * full changelog lacks. On a lakehouse table format this step is
-  * literally `MERGE INTO latest USING delta ON uuid` with file-level
-  * pruning; the partitioned-parquet form here is the same algorithm
-  * expressed against plain files.
+  * Per-batch work, listing included, is O(|delta| + |touched
+  * partitions|), independent of changelog history length — the
+  * property `latestSegments` over the full changelog lacks. On a
+  * lakehouse table format this step is literally `MERGE INTO latest
+  * USING delta ON uuid` with file-level pruning; the partitioned-parquet
+  * form here is the same algorithm expressed against plain files.
   *
   * Replay converges after a crash at any point: the winner is
   * idempotent (deterministic keys, last-write-wins), and the swap
@@ -139,13 +142,19 @@ object MergeSink {
       .collect().map(_.getString(0)).toSeq
     if (touched.isEmpty) return
 
-    Publish.swap(spark, tablePath, touched.map(p => s"$PartCol=$p")) { staged =>
+    val names = touched.map(p => s"$PartCol=$p")
+    Publish.swap(spark, tablePath, names) { staged =>
+      // listed after swap's recovery, which restores any partition a
+      // crashed batch moved aside; a first-batch crash leaves none
+      val table = new Path(tablePath)
+      val present = Option(table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .globStatus(new Path(table, s"$PartCol=*")))
+        .fold(Set.empty[String])(_.map(_.getPath.getName).toSet)
+      val paths = names.filter(present).map(n => new Path(table, n).toString)
       val existing =
-        if (hasPartitions(spark, tablePath))
-          spark.read.parquet(tablePath)
-            .filter(col(PartCol).isin(touched: _*)) // partition-pruned scan
-            .select(delta.columns.map(col): _*)
-        else delta.limit(0)
+        if (paths.isEmpty) delta.limit(0)
+        else spark.read.schema(delta.schema).option("basePath", tablePath)
+          .parquet(paths: _*)
       pick(existing.unionByName(delta), key, winner)
         // cluster by the partition column BEFORE the partitioned write:
         // without this every shuffle task holds ~every uuid prefix and
@@ -159,14 +168,5 @@ object MergeSink {
         .localCheckpoint()
         .write.mode("overwrite").partitionBy(PartCol).parquet(staged)
     }
-  }
-
-  /** Whether the table holds a partition yet: a crash during the very
-    * first batch leaves only hidden staging, which `spark.read.parquet`
-    * cannot infer a schema from. */
-  private def hasPartitions(spark: SparkSession, tablePath: String): Boolean = {
-    val parts = new Path(tablePath, s"$PartCol=*")
-    Option(parts.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(parts))
-      .exists(_.nonEmpty)
   }
 }

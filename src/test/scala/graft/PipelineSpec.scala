@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.taskrouter.{Derivation, Ingest, Synth}
 
 /** End-to-end façade test: JSON → log → derived tables → report, and
@@ -150,5 +152,51 @@ class PipelineSpec extends SparkSpec {
     val row = merged.collect()(0)
     assert(row.getAs[String]("team_name") == "T3")
     assert(row.getAs[String]("email") == "b@x.co")
+  }
+
+  // --- MERGE sink over tiny (uuid, emit_seq, v) deltas ------------------
+  // the partition is the uuid's first two chars, as for segments
+
+  private def mergeTiny(t: String, rows: (String, Long, String)*): Unit =
+    graft.streaming.MergeSink.mergeBatch(spark, t, rows.toDF("uuid", "emit_seq", "v"))
+
+  private def tinyRows(t: String, parts: String*): Set[(String, Long, String)] =
+    spark.read.option("basePath", t).parquet(parts.map(p => s"$t/uuid_p=$p"): _*)
+      .select("uuid", "emit_seq", "v").as[(String, Long, String)].collect().toSet
+
+  test("MERGE sink: a table whose prefixes are all digits takes a hex prefix") {
+    // whole-table discovery would type uuid_p=05 as an integer and fail
+    // to compare it with the touched "0a"
+    val t = s"${tmp("graft-merge-digits")}/t"
+    mergeTiny(t, ("05a", 1L, "x"))
+    mergeTiny(t, ("0ab", 1L, "y"))
+    assert(tinyRows(t, "05", "0a") == Set(("05a", 1L, "x"), ("0ab", 1L, "y")))
+  }
+
+  test("MERGE sink: an existing row that wins keeps its all-digit prefix") {
+    // an integer-typed read would restage the winner under uuid_p=5
+    val t = s"${tmp("graft-merge-digits-win")}/t"
+    mergeTiny(t, ("05a", 2L, "new"))
+    mergeTiny(t, ("05a", 1L, "stale"))
+    assert(tinyRows(t, "05") == Set(("05a", 2L, "new")))
+    assert(new java.io.File(t).list().toSet == Set("uuid_p=05"))
+  }
+
+  test("MERGE sink lists only the partitions a batch touches") {
+    val t = s"${tmp("graft-merge-touched")}/t"
+    mergeTiny(t, ("aa1", 1L, "a"), ("bb1", 1L, "b"))
+    // an untouched directory that whole-table partition discovery
+    // rejects (a second partition column under one uuid_p)
+    Seq(1).toDF("n").write.parquet(s"$t/uuid_p=zz/x=1")
+    def zz(): Set[String] = {
+      val root = java.nio.file.Paths.get(t, "uuid_p=zz")
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.map(p => s"${root.relativize(p)}:${p.toFile.length}").toSet
+      finally walk.close()
+    }
+    val planted = zz()
+    mergeTiny(t, ("aa1", 2L, "a2"))
+    assert(tinyRows(t, "aa", "bb") == Set(("aa1", 2L, "a2"), ("bb1", 1L, "b")))
+    assert(zz() == planted)
   }
 }

@@ -788,4 +788,15 @@ class R15OpsSpec extends SparkSpec {
       assert(d == """"busy_pct":40.0,"steal_pct":1.0""", d)
     } finally java.util.Locale.setDefault(prev)
   }
+
+  test("bench: the last stdout line fits in 300 chars and parses") {
+    val line = Bench.totalsLine(12345.678, 341, 2, "/data/" + "nested/" * 40 + "sf0.1")
+    assert(line.length < 300, line)
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(j.get("metric").asText == "bench_totals")
+    assert(j.get("total").asDouble == 12345.678)
+    assert(j.get("n_queries").asInt == 341 && j.get("n_failed").asInt == 2)
+    assert(j.get("sf").asText == "sf0.1")
+    assert(j.get("summary").asText == Bench.SummaryPath)
+  }
 }

@@ -13,11 +13,13 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // mirror GraftSession's production default: streaming specs must
-      // pass on the provider the pipeline actually runs on
+      // mirror GraftSession's production settings: specs must pass on
+      // the state-store provider and the driver-side partition listing
+      // the pipeline actually runs with
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
