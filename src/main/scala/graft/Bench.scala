@@ -1,9 +1,11 @@
 package graft
 
 
-/** Benchmark entry point (driver contract): runs every SparkEntry query
-  * on SPARK_GRAFT_SF_DIR and prints one JSON line with per-query and
-  * total wall seconds. */
+/** Benchmark entry point (driver contract) and the one instrumented
+  * runner: runs every SparkEntry query (or the names given as
+  * arguments) on SPARK_GRAFT_SF_DIR, prints one JSON line with
+  * per-query and total wall seconds, and writes [[SummaryPath]] with
+  * one [[recordJson]] record per timed query. */
 object Bench {
 
   /** Locale-pinned numeric JSON field (ADVICE r14): Scala's
@@ -26,15 +28,13 @@ object Bench {
       sfDir: String): String =
     s"""{"metric":"bench_totals","total":${num(total, 3)},"unit":"sec","n_queries":$nQueries,"n_failed":$nFailed,"sf":"${new java.io.File(sfDir).getName}","summary":"$SummaryPath"}"""
 
-  /** The per-query load-annotation rule: a cell is flagged when its
-    * wall exceeds 3x its BENCH_HISTORY median (floored at 1 s — sub-
-    * second cells jitter 3x on scheduler noise alone), or 2 s flat for
-    * a query with no history yet. */
-  private[graft] def slowCell(wall: Double, median: Option[Double]): Boolean =
-    median match {
-      case Some(m) => wall > math.max(1.0, 3.0 * m)
-      case None => wall > 2.0
-    }
+  /** One timed query's record in the summary artifact: construction
+    * seconds and the jobs it ran, the jobs the noop write ran, every
+    * task of both, and the busy/steal CPU shares of the /proc interval
+    * around the query. */
+  private[graft] def recordJson(constructS: Double, constructJobs: Int,
+      jobs: Int, tasks: Int, begin: Load.Cpu, end: Load.Cpu): String =
+    s"""{"construct_s":${num(constructS, 3)},"construct_jobs":$constructJobs,"jobs":$jobs,"tasks":$tasks,${Load.deltaFields(begin, end)}}"""
 
   /** Box-load evidence (VERDICT r12 watch item): the r12 driver
     * artifact's 61.7 s streaming leg vs the 32 s quiet envelope was
@@ -103,6 +103,27 @@ object Bench {
     def drain(): Seq[(Long, Load.Cpu, Double)] = {
       val it = Iterator.continually(buf.poll()).takeWhile(_ != null)
       it.toSeq.sortBy(_._1)
+    }
+  }
+
+  /** Job and task counts for the per-query records: every job start and
+    * task end in the application. */
+  private final class JobCounter extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
+    private val ended = new java.util.concurrent.atomic.AtomicInteger
+    override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.incrementAndGet(); () }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = { tasks.incrementAndGet(); () }
+
+    /** Listener events arrive on the bus thread after the action that
+      * posted them returns. A job posts its last task end before its
+      * job end, so once every started job has been seen ending, the
+      * counts hold the finished query's tasks. Bounded at 1 s. */
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 1000000000L
+      while (ended.get < jobs.get && System.nanoTime() < deadline) Thread.sleep(1)
     }
   }
 
@@ -220,12 +241,12 @@ object Bench {
     {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      // unspread scans: warmup warms the reader/codegen paths without
+      // raw scans: warmup warms the reader/codegen paths without
       // absorbing the fact-table relayout, which gets its own labeled
       // line below (q_tables_relayout)
-      Tables.loadUnspread(spark, sfDir, "lineitem")
+      Tables.loadRaw(spark, sfDir, "lineitem")
         .groupBy("l_returnflag").count().collect()
-      Tables.loadUnspread(spark, sfDir, "events").limit(100).collect()
+      Tables.loadRaw(spark, sfDir, "events").limit(100).collect()
       val warm = spark.range(10000).toDF("id")
         .withColumn("g", col("id") % 7)
         .withColumn("d", col("id").cast("decimal(18,2)"))
@@ -368,90 +389,40 @@ object Bench {
     // its 1.2 s "timing" sat inconspicuously in the map). Failures are
     // omitted from the timings map and named in the summary.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Threshold-triggered PER-QUERY load attribution (VERDICT r14 item
-    // 6): the 25-query load windows pin bursts to a window, but r14's
-    // q_text_langid showed a single slow cell can hide inside a QUIET
-    // window. A /proc sample brackets every query (two ~1 KB procfs
-    // reads — nothing measurable), and any cell slower than 3x its
-    // BENCH_HISTORY median (bench/medians.json, regenerated by
-    // scripts/gen_medians.py; 2 s flat for queries with no history)
-    // emits its own busy/steal/load1 row — so a mover is adjudicable
-    // from the artifact alone, per cell, not per window.
-    val medians: Map[String, Double] =
-      try {
-        val p = java.nio.file.Paths.get("bench", "medians.json")
-        if (java.nio.file.Files.exists(p)) {
-          val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-          """"([^"]+)"\s*:\s*([0-9][0-9.]*)""".r.findAllMatchIn(txt)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        } else {
-          System.err.println(
-            "[bench] bench/medians.json absent — per-query load rows fall back to the flat 2s rule")
-          Map.empty
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
-        // degrading to the flat rule is acceptable; doing it SILENTLY
-        // is not — the artifact would flag the wrong cells with no clue
-        System.err.println(s"[bench] failed to read bench/medians.json: $e")
-        Map.empty
-      }
-    val queryLoads = scala.collection.mutable.ArrayBuffer.empty[String]
-    def noteSlow(name: String, wall: Double, begin: Load.Cpu): Unit = {
-      val med = medians.get(name)
-      if (slowCell(wall, med)) {
-        val end = Load.cpu()
-        queryLoads += (s"""{"q":"$name","wall_sec":${num(wall, 3)},""" +
-          med.map(m => s""""median":${num(m, 3)},""").getOrElse("") +
-          s"""${Load.deltaFields(begin, end)},"load1":${num(Load.load1(), 2)}}""")
-      }
-    }
-    // Per-query-window load attribution (VERDICT r13 task 5): the
-    // per-leg samples can say "the 300-query leg ran loaded" but can't
-    // pin a burst to a query. A /proc sample every [[WinEvery]] queries
-    // emits a load_windows array — each row names the window's first
-    // and last query + its busy/steal/load1 — so a single slow cell in
-    // the per-query map can be read against the load it ran under.
-    val WinEvery = 25
-    val loadWindows = scala.collection.mutable.ArrayBuffer.empty[String]
-    var winBegin = Load.cpu()
-    var winWall = System.nanoTime()
-    var winFirst: String = null
-    var winCount = 0
-    def closeWindow(last: String): Unit = if (winFirst != null) {
-      val end = Load.cpu()
-      val wall = (System.nanoTime() - winWall) / 1e9
-      loadWindows += (s"""{"from":"$winFirst","to":"$last","n":$winCount,""" +
-        s""""wall_sec":${num(wall, 3)},${Load.deltaFields(winBegin, end)},""" +
-        s""""load1":${num(Load.load1(), 2)}}""")
-      winBegin = end; winWall = System.nanoTime(); winFirst = null; winCount = 0
-    }
-    var lastName: String = null
+    // One record per timed query (see [[recordJson]]): the job counter
+    // splits construction from the write, and a /proc sample on either
+    // side gives the load the query ran under.
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    val records = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = relayout ++ staging ++ streaming ++ graphStaging ++ incBuilds ++
       selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      if (winFirst == null) winFirst = name
-      lastName = name
+      counter.settle()
+      val (jobs0, tasks0) = (counter.jobs.get, counter.tasks.get)
       val qBegin = Load.cpu()
       val t0 = System.nanoTime()
-      // noop write forces every output column to be computed — count()
-      // would let Catalyst prune the projections and eliminate sorts,
-      // timing a row-count scan instead of the query
       try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val df = fn(spark, sfDir)
+        val constructS = (System.nanoTime() - t0) / 1e9
+        val constructJobs = counter.jobs.get - jobs0
+        // noop write forces every output column to be computed — count()
+        // would let Catalyst prune the projections and eliminate sorts,
+        // timing a row-count scan instead of the query
+        df.write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
-        noteSlow(name, wall, qBegin)
-        winCount += 1
-        if (winCount >= WinEvery) closeWindow(name)
+        val qEnd = Load.cpu()
+        counter.settle()
+        records += "\"" + name + "\":" + recordJson(constructS, constructJobs,
+          counter.jobs.get - jobs0 - constructJobs, counter.tasks.get - tasks0, qBegin, qEnd)
         Some(name -> wall)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e")
         failed += name
-        winCount += 1
-        if (winCount >= WinEvery) closeWindow(name)
         None
       }
     }
-    if (lastName != null) closeWindow(lastName)
-    val loadWindowsJson = loadWindows.mkString("[", ",", "]")
+    spark.sparkContext.removeSparkListener(counter)
+    val recordsJson = records.mkString("{", ",", "}")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v, 3) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -481,13 +452,6 @@ object Bench {
     // burst lands. Emitted BEFORE the summary so the totals line stays
     // last in any tail-capture window.
     println(s"""{"metric":"stream_batches","batches":$batchesJson}""")
-    // Query-leg load windows (one row per ~25 queries): lets a burst be
-    // pinned to a window of named queries, not just to "the leg".
-    println(s"""{"metric":"load_windows","every":$WinEvery,"windows":$loadWindowsJson}""")
-    // Per-query load rows for cells slower than 3x their history median
-    // (or 2 s with no history): the finest attribution grain.
-    val queryLoadsJson = queryLoads.mkString("[", ",", "]")
-    println(s"""{"metric":"query_loads","rule":"wall > max(1s, 3x bench/medians.json) or 2s unknown","flagged":$queryLoadsJson}""")
     val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Per-leg load evidence: busy/steal CPU shares across each bench
     // phase plus start/end 1-min loadavg — the driver artifact now
@@ -506,7 +470,7 @@ object Bench {
     // File artifact (VERDICT r7 task 3): the full per-query map plus the
     // summary, immune to any stdout tail-capture convention.
     val artifact =
-      s"""{"summary":$summary,"queries":$qs,"stream_batches":$batchesJson,"load_windows":$loadWindowsJson,"query_loads":$queryLoadsJson}"""
+      s"""{"summary":$summary,"queries":$qs,"stream_batches":$batchesJson,"records":$recordsJson}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(SummaryPath),
       artifact.getBytes("UTF-8"))
     // The driver-contract line — the ONE JSON line with the per-query

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local SparkSession builder for the driver-contract mains
-  * (Verify / Bench / Profile). Having a single copy guarantees the
-  * plans the correctness gate verifies are the plans the benchmark
-  * times — the previous per-main builders had silently drifted (Verify
-  * ran without AQE or the raised broadcast threshold). */
+/** The one local SparkSession builder for every main (Verify, Bench,
+  * Explain, DeterminismSweep, ReportMain). Having a single copy
+  * guarantees the plans the correctness gate verifies are the plans
+  * the benchmark times — the previous per-main builders had silently
+  * drifted (Verify ran without AQE or the raised broadcast threshold). */
 object GraftSession {
   def build(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",

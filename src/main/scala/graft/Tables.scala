@@ -52,16 +52,8 @@ object Tables {
     else loadRaw(spark, dir, name)
   }
 
-  /** The pre-relayout single-file scan, for the one order-sensitive
-    * consumer: q_unpivot's ORDER BY (l_orderkey, l_linenumber, metric)
-    * has duplicate keys in the synthetic lineitem, so its tie order —
-    * part of the hash-pinned result — comes from the historical
-    * single-file scan order. Every order-insensitive query reads the
-    * spread layout via [[load]]. */
-  private[graft] def loadUnspread(spark: SparkSession, dir: String,
-      name: String): DataFrame = loadRaw(spark, dir, name)
-
-  private def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** The driver file as shipped, without the relayout. */
+  private[graft] def loadRaw(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts has shipped in two driver generations: parquet
       // TIMESTAMP(NANOS) — which Spark refuses to read natively

@@ -2384,15 +2384,14 @@ object Relational {
     * fans out to 4 metric rows map-side. */
   def qUnpivot(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // single-file scan: the ORDER BY below has duplicate (orderkey,
-    // linenumber) keys, so tie order — part of the hash-pinned result —
-    // must stay the historical input order (see Tables.loadUnspread)
-    Tables.loadUnspread(spark, dir, "lineitem")
+    Tables.load(spark, dir, "lineitem")
       .unpivot(
         Array($"l_orderkey", $"l_linenumber"),
         Array($"l_quantity", $"l_extendedprice", $"l_discount", $"l_tax"),
         "metric", "val")
-      .orderBy($"l_orderkey", $"l_linenumber", $"metric")
+      // (orderkey, linenumber) repeats in lineitem; rows that also tie
+      // on val are identical, so the order is total
+      .orderBy($"l_orderkey", $"l_linenumber", $"metric", $"val")
   }
 
   /** Time-series resampling: per-user daily grid (sequence + explode
@@ -4527,7 +4526,7 @@ object Relational {
         |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
         |UNION ALL
         |SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
+        |ORDER BY l_orderkey, l_linenumber, metric, val""".stripMargin,
 
     "q_ts_fill" ->
       """WITH e AS (SELECT user_id, date_trunc('day', ts) AS day, value FROM events),

@@ -73,9 +73,6 @@ object StreamMetrics {
       }
     }
 
-    /** Drain the buffer into the metrics table (one parquet file per
-      * flush — run per N batches or on a timer in production; the
-      * listener thread itself never touches I/O). */
     /** Remove and return every buffered row — used by [[flush]] and by
       * callers that want the rows in-process (the bench's streaming
       * self-attribution embeds them in its summary artifact). */
@@ -85,6 +82,9 @@ object StreamMetrics {
       rows
     }
 
+    /** Drain the buffer into the metrics table (one parquet file per
+      * flush — run per N batches or on a timer in production; the
+      * listener thread itself never touches I/O). */
     def flush(spark: SparkSession, path: String): Unit = {
       val rows = drain()
       if (rows.nonEmpty) {

@@ -78,6 +78,19 @@ class BreadthSpec extends SparkSpec {
       Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax"))
   }
 
+  test("unpivot rows are in a total order: adjacent rows strictly ordered or equal") {
+    val rows = Relational.qUnpivot(spark, sf0001).collect().toSeq.map { r =>
+      (r.getAs[Long]("l_orderkey"), r.getAs[Int]("l_linenumber"),
+        r.getAs[String]("metric"), r.getAs[Double]("val"))
+    }
+    val order = Ordering.Tuple4(Ordering[Long], Ordering[Int], Ordering[String],
+      Ordering.Double.TotalOrdering)
+    val outOfOrder = rows.zip(rows.tail).filter { case (a, b) => order.gt(a, b) }
+    assert(outOfOrder.isEmpty, outOfOrder.take(5))
+    // the case the tiebreaker exists for: (orderkey, linenumber) repeats
+    assert(rows.map(r => (r._1, r._2)).distinct.size < rows.size / 4)
+  }
+
   test("distribution funcs: pct_rank/cume bounded, first_id is partition minimum") {
     val rows = Relational.qWindowDistribution(spark, sf0001).collect()
     rows.foreach { r =>

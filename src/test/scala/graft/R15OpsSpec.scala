@@ -727,22 +727,6 @@ class R15OpsSpec extends SparkSpec {
     assert(a == b)
   }
 
-  // --- bench: per-query load-annotation rule + locale-pinned JSON -------
-
-  test("bench: slow-cell rule — 3x median floored at 1s, 2s with no history") {
-    assert(!Bench.slowCell(0.9, Some(0.1))) // sub-second jitter: floored
-    assert(Bench.slowCell(1.1, Some(0.1)))
-    assert(!Bench.slowCell(4.0, Some(1.5))) // 4.0 < 4.5
-    assert(Bench.slowCell(4.6, Some(1.5)))
-    assert(!Bench.slowCell(1.9, None))
-    assert(Bench.slowCell(2.1, None))
-    // the r14 watch item would have been flagged: langid median 1.47,
-    // the 2.49 s quiet-window cell is under 3x — so the rule must ALSO
-    // catch it at the next tier up… it does not (2.49 < 4.41): the rule
-    // targets unambiguous movers; gradual drift is BENCH_HISTORY's job
-    assert(!Bench.slowCell(2.49, Some(1.47)))
-  }
-
   // --- r15 review fixes -------------------------------------------------
 
   test("warc: framers reject urls with EOLs and real framing rejects negative ids") {
@@ -786,6 +770,21 @@ class R15OpsSpec extends SparkSpec {
       val ok2 = Bench.Load.Cpu(2000L, 1200L, 20L)
       val d = Bench.Load.deltaFields(ok, ok2)
       assert(d == """"busy_pct":40.0,"steal_pct":1.0""", d)
+    } finally java.util.Locale.setDefault(prev)
+  }
+
+  test("bench: a per-query record parses under a comma-decimal locale") {
+    val prev = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      val rec = Bench.recordJson(1234.5, 2, 3, 40,
+        Bench.Load.Cpu(1000L, 600L, 10L), Bench.Load.Cpu(2000L, 1200L, 20L))
+      val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(rec)
+      assert(j.get("construct_s").asDouble == 1234.5, rec)
+      assert(j.get("construct_jobs").asInt == 2 && j.get("jobs").asInt == 3, rec)
+      assert(j.get("tasks").asInt == 40, rec)
+      assert(j.get("busy_pct").asDouble == 40.0 && j.get("steal_pct").asDouble == 1.0, rec)
+      assert(j.size == 6, rec)
     } finally java.util.Locale.setDefault(prev)
   }
 
