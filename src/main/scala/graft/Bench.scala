@@ -281,6 +281,16 @@ object Bench {
       Seq("q_tables_relayout" -> (System.nanoTime() - t0) / 1e9)
     }
 
+    // The SQL surface's temp views, registered once per session by
+    // whichever `q_sql_*` query runs first: one schema read per table
+    // not served from the relayout. Timed as its own labeled line (the
+    // same policy as q_tables_relayout), inside the reported totals.
+    val views: Seq[(String, Double)] = {
+      val t0 = System.nanoTime()
+      Tables.registerAll(spark, sfDir)
+      Seq("q_tables_views" -> (System.nanoTime() - t0) / 1e9)
+    }
+
     // One-time TaskRouter staging (synth → parse → as-of windows → base
     // projection → parquet stage table), timed as its OWN labeled line:
     // production derives the segment table once and queries it many
@@ -337,9 +347,9 @@ object Bench {
         val t0 = System.nanoTime()
         Pipeline.startStreamingMerged(spark, inDir, s"$base/ckpt", s"$base/out")
           .awaitTermination()
-        // non-empty probe, not a full count: a count() scans all ~256
-        // dynamic partitions of the merge table and would charge ~3s of
-        // read-side work to the pipeline metric
+        // non-empty probe, not a full count: the metric times the
+        // pipeline, and a count() would add a scan of the whole merged
+        // table to it
         if (Pipeline.mergedSegments(spark, s"$base/out").isEmpty)
           System.err.println("[bench] q_tr_stream_merge produced 0 rows")
         val sec = (System.nanoTime() - t0) / 1e9
@@ -395,7 +405,7 @@ object Bench {
     val counter = new JobCounter
     spark.sparkContext.addSparkListener(counter)
     val records = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = relayout ++ staging ++ streaming ++ graphStaging ++ incBuilds ++
+    val results = relayout ++ views ++ staging ++ streaming ++ graphStaging ++ incBuilds ++
       selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       counter.settle()
       val (jobs0, tasks0) = (counter.jobs.get, counter.tasks.get)

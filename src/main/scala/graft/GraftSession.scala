@@ -21,8 +21,8 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
       // List partition directories on the driver: in local[N] the
       // executors share the driver's file system, so a distributed
-      // listing job only adds one task launch per directory (256 to
-      // open the MERGE sink's `uuid_p` tables).
+      // listing job only adds one task launch per directory (a
+      // partitioned table such as the IVF index's `cell=` layout).
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
       // RocksDB state store for the production streaming pipeline: the
       // fMGWS task/worker state machines key on every open task — at

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The only ways a maintained table makes new data visible. Every
@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
   *  - [[files]]: a batch published as files with deterministic names
   *    into directories other batches share (IvfIndex, InvertedIndex).
   *  - [[swap]]: directories replaced in place (Compaction,
-  *    AggMaintenance compaction, the MergeSink upsert).
+  *    AggMaintenance compaction).
+  *  - [[commit]]: one small file created whole under a name that must
+  *    not exist yet (the MergeSink version record, whose creation is
+  *    the batch's commit).
   */
 object Publish {
 
@@ -100,5 +103,26 @@ object Publish {
     fs.delete(staged, true)
     fs.delete(backup, true)
     out
+  }
+
+  /** Create the file `dest` holding `body`, visible whole or not at
+    * all: the bytes go to a temp file beside `dest`, named
+    * `_<name of dest>.<random>.tmp`, which is renamed to `dest` only if
+    * `dest` does not exist (a second commit of one name fails instead
+    * of replacing it). A crash leaves at most the temp file, for the
+    * caller to delete. */
+  def commit(spark: SparkSession, dest: String, body: Array[Byte]): Unit = {
+    val fs = fsOf(spark, new Path(dest))
+    val dst = fs.makeQualified(new Path(dest))
+    val tmp = new Path(dst.getParent, s"_${dst.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(body) finally out.close()
+    try FileContext.getFileContext(dst.toUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, dst, Options.Rename.NONE)
+    catch {
+      case e: FileAlreadyExistsException =>
+        fs.delete(tmp, false)
+        throw new IllegalStateException(s"publish failed: $dest is already committed", e)
+    }
   }
 }

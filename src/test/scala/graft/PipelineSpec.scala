@@ -86,14 +86,15 @@ class PipelineSpec extends SparkSpec {
       batch.orderBy("uuid").collect().toSeq)
     // the in-progress row was updated in place, not duplicated
     assert(merged.filter($"segment_kind" === "CONVERSATION IN PROGRESS").count() == 0)
-    // clustered merge write: one file per touched partition dir, not
-    // tasks × partitions (the 8192-file fan-out fixed in r6)
-    val partDirs = new java.io.File(out, "segments_latest").listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("uuid_p="))
-    assert(partDirs.nonEmpty)
-    partDirs.foreach { d =>
-      val files = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files == 1, s"${d.getName}: $files files")
+    // clustered merge write: one file per range, not tasks × ranges
+    // (the 8192-file fan-out fixed in r6)
+    val table = s"$out/segments_latest"
+    val v = graft.streaming.MergeSink.newest(spark, table).get
+    assert(v.files.map(_.range).sorted == (0 until v.ranges))
+    v.files.foreach { f =>
+      val dir = new java.io.File(table, f.path).getParentFile
+      val files = dir.listFiles().count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"${dir.getName}: $files files")
     }
   }
 
@@ -155,39 +156,92 @@ class PipelineSpec extends SparkSpec {
   }
 
   // --- MERGE sink over tiny (uuid, emit_seq, v) deltas ------------------
-  // the partition is the uuid's first two chars, as for segments
 
   private def mergeTiny(t: String, rows: (String, Long, String)*): Unit =
     graft.streaming.MergeSink.mergeBatch(spark, t, rows.toDF("uuid", "emit_seq", "v"))
 
-  private def tinyRows(t: String, parts: String*): Set[(String, Long, String)] =
-    spark.read.option("basePath", t).parquet(parts.map(p => s"$t/uuid_p=$p"): _*)
-      .select("uuid", "emit_seq", "v").as[(String, Long, String)].collect().toSet
-
-  test("MERGE sink: a table whose prefixes are all digits takes a hex prefix") {
-    // whole-table discovery would type uuid_p=05 as an integer and fail
-    // to compare it with the touched "0a"
-    val t = s"${tmp("graft-merge-digits")}/t"
-    mergeTiny(t, ("05a", 1L, "x"))
-    mergeTiny(t, ("0ab", 1L, "y"))
-    assert(tinyRows(t, "05", "0a") == Set(("05a", 1L, "x"), ("0ab", 1L, "y")))
+  /** Each file of the newest version: its range, the version's range
+    * count and the file's rows. */
+  private def tinyFiles(t: String): Seq[(Int, Int, Set[(String, Long, String)])] = {
+    val v = graft.streaming.MergeSink.newest(spark, t).get
+    v.files.map { f =>
+      (f.range, v.ranges, spark.read.schema(v.schema).parquet(s"$t/${f.path}")
+        .select("uuid", "emit_seq", "v").as[(String, Long, String)].collect().toSet)
+    }
   }
 
-  test("MERGE sink: an existing row that wins keeps its all-digit prefix") {
-    // an integer-typed read would restage the winner under uuid_p=5
-    val t = s"${tmp("graft-merge-digits-win")}/t"
-    mergeTiny(t, ("05a", 2L, "new"))
-    mergeTiny(t, ("05a", 1L, "stale"))
-    assert(tinyRows(t, "05") == Set(("05a", 2L, "new")))
-    assert(new java.io.File(t).list().toSet == Set("uuid_p=05"))
+  private def tinyRows(t: String): Set[(String, Long, String)] =
+    tinyFiles(t).flatMap(_._3).toSet
+
+  /** Run `f` with `spark.sql.files.maxPartitionBytes` set to `bytes`. */
+  private def withMaxPartitionBytes[A](bytes: Long)(f: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try f
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("MERGE sink lists only the partitions a batch touches") {
-    val t = s"${tmp("graft-merge-touched")}/t"
+  test("MERGE sink: a row's range is a function of its key alone") {
+    // range = pmod(xxhash64(key), 65536) * ranges / 65536, replayed with
+    // Spark's own hash (seed 42); a 1-byte scan partition makes the
+    // table spread over many ranges, so keys land apart
+    def range(key: String, ranges: Int): Int = {
+      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromString(key), 42L)
+      (java.lang.Math.floorMod(h, 65536L) * ranges / 65536).toInt
+    }
+    val want = Set(("05a", 2L, "new"), ("0ab", 1L, "y"), ("1", 1L, "z"))
+    withMaxPartitionBytes(1) {
+      val a = s"${tmp("graft-merge-route-a")}/t"
+      mergeTiny(a, ("05a", 2L, "new"), ("0ab", 1L, "y"))
+      mergeTiny(a, ("05a", 1L, "stale"), ("1", 1L, "z"))
+      val b = s"${tmp("graft-merge-route-b")}/t"
+      Seq(("1", 1L, "z"), ("0ab", 1L, "y"), ("05a", 1L, "stale"), ("05a", 2L, "new"))
+        .foreach(mergeTiny(b, _))
+      Seq(a, b).foreach { t =>
+        val files = tinyFiles(t)
+        assert(files.map(_._2).head > 1, files)
+        assert(tinyRows(t) == want)
+        files.foreach { case (r, ranges, rows) =>
+          rows.foreach(row => assert(range(row._1, ranges) == r, (row, r, ranges)))
+        }
+      }
+    }
+  }
+
+  test("MERGE sink: a table grows its range count with its bytes") {
+    val parsed = Ingest.parse(Synth.cloudEvents(spark, sf0001)).localCheckpoint()
+    val changelog = graft.streaming.StreamingPipeline.segmentsChangelog(spark, parsed)
+      .localCheckpoint()
+    val mid = changelog.stat.approxQuantile("emit_seq", Array(0.5), 0.0).head
+    val t = s"${tmp("graft-merge-grow")}/t"
+    graft.streaming.MergeSink.mergeBatch(spark, t, changelog.filter($"emit_seq" < mid))
+    val first = graft.streaming.MergeSink.newest(spark, t).get
+    assert(first.ranges == 1 && first.files.size == 1)
+    // the recorded bytes no longer fit one scan partition, but fit two
+    withMaxPartitionBytes(first.bytes - 1) {
+      graft.streaming.MergeSink.mergeBatch(spark, t, changelog.filter($"emit_seq" >= mid))
+    }
+    val grown = graft.streaming.MergeSink.newest(spark, t).get
+    assert(grown.ranges == 2)
+    // every file rewritten into this version's staging, one per range
+    assert(grown.files.map(_.range).sorted == Seq(0, 1))
+    assert(grown.files.forall(_.path.startsWith(s"_data/${grown.id}/")), grown.files)
+    val got = graft.streaming.MergeSink.read(spark, t).orderBy("uuid").collect().toSeq
+    assert(got == Derivation.segments(parsed).orderBy("uuid").collect().toSeq)
+  }
+
+  test("MERGE sink: a merge never reads or changes a file that no record names") {
+    val t = s"${tmp("graft-merge-unnamed")}/t"
     mergeTiny(t, ("aa1", 1L, "a"), ("bb1", 1L, "b"))
-    // an untouched directory that whole-table partition discovery
-    // rejects (a second partition column under one uuid_p)
+    // unnamed files: a legacy-layout directory (which whole-table
+    // partition discovery rejects: a second partition column under one
+    // uuid_p) and a stale staging directory of a crashed attempt,
+    // holding a row no merge wrote
     Seq(1).toDF("n").write.parquet(s"$t/uuid_p=zz/x=1")
+    Seq(("zz1", 9L, "stale")).toDF("uuid", "emit_seq", "v")
+      .write.parquet(s"$t/_data/7/range=0")
     def zz(): Set[String] = {
       val root = java.nio.file.Paths.get(t, "uuid_p=zz")
       val walk = java.nio.file.Files.walk(root)
@@ -196,7 +250,9 @@ class PipelineSpec extends SparkSpec {
     }
     val planted = zz()
     mergeTiny(t, ("aa1", 2L, "a2"))
-    assert(tinyRows(t, "aa", "bb") == Set(("aa1", 2L, "a2"), ("bb1", 1L, "b")))
+    assert(tinyRows(t) == Set(("aa1", 2L, "a2"), ("bb1", 1L, "b")))
     assert(zz() == planted)
+    // the stale staging is pruned: no record names it
+    assert(!new java.io.File(t, "_data/7").exists())
   }
 }

@@ -14,8 +14,8 @@ import graft.text.InvertedIndex
 
 /** Crash-MID-publish convergence for the maintained tables: a job
   * killed between the staging write and the publish — between the two
-  * publishes of a two-table sink, or in the middle of a MERGE sink's
-  * partition swap — must converge to the uncrashed table when the
+  * publishes of a two-table sink, or before or after a MERGE sink's
+  * version commit — must converge to the uncrashed table when the
   * batch replays. Torn states are planted by running the real merge
   * and then deleting/retaining exactly what the crash window leaves. */
 class TornPublishSpec extends SparkSpec {
@@ -166,46 +166,42 @@ class TornPublishSpec extends SparkSpec {
     (df.filter(col(c) < mid), df.filter(col(c) >= mid))
   }
 
-  private def partitions(table: String): Set[String] =
-    fs.listStatus(new Path(table)).map(_.getPath.getName)
-      .filter(_.startsWith("uuid_p=")).toSet
-
   /** Merge `b1` then `b2` into a fresh table, each replayed after the
     * crash its first attempt left: `b1`, the very first batch, died
-    * after staging its partitions (the table directory holds only
-    * staging); `b2` died mid-swap, after moving a partition it touches
-    * aside and before publishing its replacement. */
+    * before its commit (its files are staged under `_data/0`, no record
+    * names them); `b2` died after its commit and before pruning (a
+    * crashed attempt's staging and a commit's temp file are still
+    * there). */
   private def crashAndReplay(name: String, b1: DataFrame, b2: DataFrame,
       merge: (String, DataFrame) => Unit): String = {
-    val hconf = spark.sparkContext.hadoopConfiguration
     val t = tmp(name)
-    // b2's partitions, as staged by a merge of b2 alone
-    val staged = tmp(s"${name}_b2_alone")
-    merge(staged, b2)
-    def plantStaging(): Unit = {
-      assert(FileUtil.copy(fs, new Path(staged), fs, new Path(s"$t/_new"), false, hconf))
-      ()
-    }
-
-    plantStaging()
+    merge(t, b1)
+    assert(fs.delete(new Path(s"$t/_v/0"), false))
+    assert(fs.exists(new Path(s"$t/_data/0")) && MergeSink.newest(spark, t).isEmpty)
     merge(t, b1)
 
-    val part = (partitions(t) intersect partitions(staged)).min
-    plantStaging()
-    fs.mkdirs(new Path(s"$t/_old"))
-    assert(fs.rename(new Path(s"$t/$part"), new Path(s"$t/_old/$part")))
+    merge(t, b2)
+    val v = MergeSink.newest(spark, t).get
+    assert(FileUtil.copy(fs, new Path(s"$t/${v.files.head.path}"), fs,
+      new Path(s"$t/_data/${v.id + 5}/range=0/part-0.parquet"), false,
+      spark.sparkContext.hadoopConfiguration))
+    fs.create(new Path(s"$t/_v/_${v.id + 5}.0.tmp")).close()
     merge(t, b2)
     t
   }
 
-  /** Same rows as the uncrashed table, and no staging or backup left. */
+  /** Same rows as the uncrashed table, and nothing left that no record
+    * names. */
   private def assertConverged(got: String, want: String, read: String => DataFrame): Unit = {
     def rows(t: String) = read(t).collect().map(_.toString).toSeq.sorted
     assert(rows(got) == rows(want))
-    assert(!fs.exists(new Path(s"$got/_new")) && !fs.exists(new Path(s"$got/_old")))
+    // the crashed attempt's staging (planted at the replay's id + 4)
+    // and the commit's temp file are pruned
+    assert(!fs.exists(new Path(s"$got/_data/${MergeSink.newest(spark, got).get.id + 4}")))
+    assert(fs.listStatus(new Path(s"$got/_v")).forall(_.getPath.getName.forall(_.isDigit)))
   }
 
-  test("segments MERGE: crashes in the first batch and mid-swap converge on replay") {
+  test("segments MERGE: crashes before the first commit and before pruning converge on replay") {
     val changelog = StreamingPipeline.segmentsChangelog(spark, parsed).localCheckpoint()
     val (b1, b2) = halves(changelog, "emit_seq")
     val merge = (p: String, b: DataFrame) => MergeSink.mergeBatch(spark, p, b)
@@ -215,12 +211,22 @@ class TornPublishSpec extends SparkSpec {
     assertConverged(got, single, MergeSink.read(spark, _))
   }
 
-  test("agents MERGE: crashes in the first batch and mid-swap converge on replay") {
+  test("agents MERGE: crashes before the first commit and before pruning converge on replay") {
     val (b1, b2) = halves(parsed, "ts_us")
     val merge = (p: String, b: DataFrame) => MergeSink.mergeAgents(spark, p, b)
     val single = tmp("merge_agents_single")
     merge(single, parsed)
     val got = crashAndReplay("merge_agents", b1, b2, merge)
     assertConverged(got, single, MergeSink.readAgents(spark, _))
+  }
+
+  test("a version is committed once: a second commit of it fails and keeps the first") {
+    val t = tmp("commit_once")
+    graft.sources.Publish.commit(spark, s"$t/_v/0", "first".getBytes("UTF-8"))
+    intercept[IllegalStateException](
+      graft.sources.Publish.commit(spark, s"$t/_v/0", "second".getBytes("UTF-8")))
+    val in = fs.open(new Path(s"$t/_v/0"))
+    try assert(new String(in.readAllBytes(), "UTF-8") == "first") finally in.close()
+    assert(fs.listStatus(new Path(s"$t/_v")).map(_.getPath.getName).toSeq == Seq("0"))
   }
 }
