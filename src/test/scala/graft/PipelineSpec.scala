@@ -182,6 +182,28 @@ class PipelineSpec extends SparkSpec {
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  // A key's prefix is its first two chars. Partition discovery typed a
+  // uuid_p=05 directory as an integer; a read with the recorded schema
+  // must keep every key a string, whatever its prefix.
+
+  test("MERGE sink: a table whose prefixes are all digits takes a hex prefix") {
+    val t = s"${tmp("graft-merge-digits")}/t"
+    mergeTiny(t, ("05a", 1L, "x"))
+    mergeTiny(t, ("0ab", 1L, "y"))
+    assert(tinyRows(t) == Set(("05a", 1L, "x"), ("0ab", 1L, "y")))
+    assert(graft.streaming.MergeSink.newest(spark, t).get.schema("uuid").dataType ==
+      org.apache.spark.sql.types.StringType)
+  }
+
+  test("MERGE sink: an existing row that wins keeps its all-digit prefix") {
+    // an integer-typed read would restage the winner as key "5"
+    val t = s"${tmp("graft-merge-digits-win")}/t"
+    mergeTiny(t, ("05a", 2L, "new"))
+    mergeTiny(t, ("05a", 1L, "stale"))
+    assert(tinyRows(t) == Set(("05a", 2L, "new")))
+    assert(new java.io.File(t).list().toSet == Set("_v", "_data"))
+  }
+
   test("MERGE sink: a row's range is a function of its key alone") {
     // range = pmod(xxhash64(key), 65536) * ranges / 65536, replayed with
     // Spark's own hash (seed 42); a 1-byte scan partition makes the

@@ -169,11 +169,10 @@ class TornPublishSpec extends SparkSpec {
   /** Merge `b1` then `b2` into a fresh table, each replayed after the
     * crash its first attempt left: `b1`, the very first batch, died
     * before its commit (its files are staged under `_data/0`, no record
-    * names them); `b2` died after its commit and before pruning (a
-    * crashed attempt's staging and a commit's temp file are still
-    * there). */
+    * names them); `b2` died at the point `crash` plants after `b2`'s
+    * real merge. */
   private def crashAndReplay(name: String, b1: DataFrame, b2: DataFrame,
-      merge: (String, DataFrame) => Unit): String = {
+      merge: (String, DataFrame) => Unit)(crash: String => Unit): String = {
     val t = tmp(name)
     merge(t, b1)
     assert(fs.delete(new Path(s"$t/_v/0"), false))
@@ -181,43 +180,83 @@ class TornPublishSpec extends SparkSpec {
     merge(t, b1)
 
     merge(t, b2)
+    crash(t)
+    merge(t, b2)
+    t
+  }
+
+  /** The crash mid-swap: the batch staged its files, and died before its
+    * record made them the table's. The commit is the swap of the
+    * versioned table, so the previous version stays the newest and the
+    * staging is named by no record. */
+  private def midSwap(t: String): Unit = {
+    val v = MergeSink.newest(spark, t).get
+    assert(fs.delete(new Path(s"$t/_v/${v.id}"), false))
+    assert(fs.exists(new Path(s"$t/_data/${v.id}")))
+    assert(MergeSink.newest(spark, t).map(_.id) == Some(v.id - 1))
+  }
+
+  /** The crash before pruning: the batch committed, and a crashed
+    * attempt's staging (planted at the replay's id + 4) and a commit's
+    * temp file are still there. */
+  private def beforePruning(t: String): Unit = {
     val v = MergeSink.newest(spark, t).get
     assert(FileUtil.copy(fs, new Path(s"$t/${v.files.head.path}"), fs,
       new Path(s"$t/_data/${v.id + 5}/range=0/part-0.parquet"), false,
       spark.sparkContext.hadoopConfiguration))
     fs.create(new Path(s"$t/_v/_${v.id + 5}.0.tmp")).close()
-    merge(t, b2)
-    t
   }
 
   /** Same rows as the uncrashed table, and nothing left that no record
-    * names. */
+    * names: every `_data` directory is a committed version's, and `_v`
+    * holds no commit's temp file. */
   private def assertConverged(got: String, want: String, read: String => DataFrame): Unit = {
     def rows(t: String) = read(t).collect().map(_.toString).toSeq.sorted
     assert(rows(got) == rows(want))
-    // the crashed attempt's staging (planted at the replay's id + 4)
-    // and the commit's temp file are pruned
-    assert(!fs.exists(new Path(s"$got/_data/${MergeSink.newest(spark, got).get.id + 4}")))
-    assert(fs.listStatus(new Path(s"$got/_v")).forall(_.getPath.getName.forall(_.isDigit)))
+    def names(dir: String) = fs.listStatus(new Path(s"$got/$dir")).map(_.getPath.getName).toSet
+    assert(names("_v").forall(_.forall(_.isDigit)), names("_v"))
+    assert(names("_data").subsetOf(names("_v")), (names("_data"), names("_v")))
   }
 
-  test("segments MERGE: crashes before the first commit and before pruning converge on replay") {
+  private def segmentsCase(name: String)(crash: String => Unit): String = {
     val changelog = StreamingPipeline.segmentsChangelog(spark, parsed).localCheckpoint()
     val (b1, b2) = halves(changelog, "emit_seq")
     val merge = (p: String, b: DataFrame) => MergeSink.mergeBatch(spark, p, b)
-    val single = tmp("merge_seg_single")
+    val single = tmp(s"${name}_single")
     merge(single, changelog)
-    val got = crashAndReplay("merge_seg", b1, b2, merge)
+    val got = crashAndReplay(name, b1, b2, merge)(crash)
     assertConverged(got, single, MergeSink.read(spark, _))
+    got
+  }
+
+  private def agentsCase(name: String)(crash: String => Unit): String = {
+    val (b1, b2) = halves(parsed, "ts_us")
+    val merge = (p: String, b: DataFrame) => MergeSink.mergeAgents(spark, p, b)
+    val single = tmp(s"${name}_single")
+    merge(single, parsed)
+    val got = crashAndReplay(name, b1, b2, merge)(crash)
+    assertConverged(got, single, MergeSink.readAgents(spark, _))
+    got
+  }
+
+  test("segments MERGE: crashes in the first batch and mid-swap converge on replay") {
+    val t = segmentsCase("merge_seg_swap")(midSwap)
+    // each replay took the id its crashed attempt staged under
+    assert(MergeSink.newest(spark, t).get.id == 1)
+  }
+
+  test("agents MERGE: crashes in the first batch and mid-swap converge on replay") {
+    val t = agentsCase("merge_agents_swap")(midSwap)
+    // each replay took the id its crashed attempt staged under
+    assert(MergeSink.newest(spark, t).get.id == 1)
+  }
+
+  test("segments MERGE: crashes before the first commit and before pruning converge on replay") {
+    segmentsCase("merge_seg")(beforePruning)
   }
 
   test("agents MERGE: crashes before the first commit and before pruning converge on replay") {
-    val (b1, b2) = halves(parsed, "ts_us")
-    val merge = (p: String, b: DataFrame) => MergeSink.mergeAgents(spark, p, b)
-    val single = tmp("merge_agents_single")
-    merge(single, parsed)
-    val got = crashAndReplay("merge_agents", b1, b2, merge)
-    assertConverged(got, single, MergeSink.readAgents(spark, _))
+    agentsCase("merge_agents")(beforePruning)
   }
 
   test("a version is committed once: a second commit of it fails and keeps the first") {
