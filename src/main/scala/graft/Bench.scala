@@ -30,11 +30,16 @@ object Bench {
 
   /** One timed query's record in the summary artifact: construction
     * seconds and the jobs it ran, the jobs the noop write ran, every
-    * task of both, and the busy/steal CPU shares of the /proc interval
-    * around the query. */
+    * task of both, the generated classes compiled for both, and the
+    * busy/steal CPU shares of the /proc interval around the query. */
   private[graft] def recordJson(constructS: Double, constructJobs: Int,
-      jobs: Int, tasks: Int, begin: Load.Cpu, end: Load.Cpu): String =
-    s"""{"construct_s":${num(constructS, 3)},"construct_jobs":$constructJobs,"jobs":$jobs,"tasks":$tasks,${Load.deltaFields(begin, end)}}"""
+      jobs: Int, tasks: Int, codegenCompiles: Long, begin: Load.Cpu, end: Load.Cpu): String =
+    s"""{"construct_s":${num(constructS, 3)},"construct_jobs":$constructJobs,"jobs":$jobs,"tasks":$tasks,"codegen_compiles":$codegenCompiles,${Load.deltaFields(begin, end)}}"""
+
+  /** Generated classes compiled in this JVM so far: Spark records one
+    * compile-time sample per codegen cache miss. */
+  private[graft] def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Box-load evidence (VERDICT r12 watch item): the r12 driver
     * artifact's 61.7 s streaming leg vs the 32 s quiet envelope was
@@ -409,6 +414,7 @@ object Bench {
       selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       counter.settle()
       val (jobs0, tasks0) = (counter.jobs.get, counter.tasks.get)
+      val compiles0 = codegenCompiles()
       val qBegin = Load.cpu()
       val t0 = System.nanoTime()
       try {
@@ -423,7 +429,8 @@ object Bench {
         val qEnd = Load.cpu()
         counter.settle()
         records += "\"" + name + "\":" + recordJson(constructS, constructJobs,
-          counter.jobs.get - jobs0 - constructJobs, counter.tasks.get - tasks0, qBegin, qEnd)
+          counter.jobs.get - jobs0 - constructJobs, counter.tasks.get - tasks0,
+          codegenCompiles() - compiles0, qBegin, qEnd)
         Some(name -> wall)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: $e")

@@ -3,18 +3,27 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession builder for every main (Verify, Bench,
-  * Explain, DeterminismSweep, ReportMain). Having a single copy
-  * guarantees the plans the correctness gate verifies are the plans
-  * the benchmark times — the previous per-main builders had silently
+  * Explain, DeterminismSweep, ReportMain) and for the test suite's
+  * shared session. Having a single settings list guarantees the plans
+  * the correctness gate verifies are the plans the benchmark times and
+  * the specs exercise — the previous per-main builders had silently
   * drifted (Verify ran without AQE or the raised broadcast threshold). */
 object GraftSession {
   def build(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = builder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Every setting of a graft session on `cpus` local cores; callers
+    * add only an app name. */
+  def builder(cpus: Int): SparkSession.Builder =
+    SparkSession.builder()
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -24,6 +33,15 @@ object GraftSession {
       // listing job only adds one task launch per directory (a
       // partitioned table such as the IVF index's `cell=` layout).
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
+      // Keep every generated class of the working set compiled. Spark's
+      // default cache holds 100 classes; the two live streaming queries
+      // with their MERGE upserts compile about 430 distinct classes, and
+      // the perfbench `queries` cells about 210, so at 100 each
+      // micro-batch and warm query evicts what the next one needs and
+      // runs Janino (then C1/C2 JIT) again: 686 and 511 compiles per
+      // run against 429 and 208 at this size. 1024 holds both with
+      // margin; a larger cache compiles no fewer (4000: 425 and 208).
+      .config("spark.sql.codegen.cache.maxEntries", 1024)
       // RocksDB state store for the production streaming pipeline: the
       // fMGWS task/worker state machines key on every open task — at
       // 100 TB that keyed state cannot live in the heap provider
@@ -33,8 +51,4 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

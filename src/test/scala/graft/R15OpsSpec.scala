@@ -777,14 +777,15 @@ class R15OpsSpec extends SparkSpec {
     val prev = java.util.Locale.getDefault
     try {
       java.util.Locale.setDefault(java.util.Locale.GERMANY)
-      val rec = Bench.recordJson(1234.5, 2, 3, 40,
+      val rec = Bench.recordJson(1234.5, 2, 3, 40, 1500L,
         Bench.Load.Cpu(1000L, 600L, 10L), Bench.Load.Cpu(2000L, 1200L, 20L))
       val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(rec)
       assert(j.get("construct_s").asDouble == 1234.5, rec)
       assert(j.get("construct_jobs").asInt == 2 && j.get("jobs").asInt == 3, rec)
       assert(j.get("tasks").asInt == 40, rec)
+      assert(j.get("codegen_compiles").asLong == 1500L, rec)
       assert(j.get("busy_pct").asDouble == 40.0 && j.get("steal_pct").asDouble == 1.0, rec)
-      assert(j.size == 6, rec)
+      assert(j.size == 7, rec)
     } finally java.util.Locale.setDefault(prev)
   }
 

@@ -6,22 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites: one local JVM session, UTC, AQE on. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror GraftSession's production settings: specs must pass on
-      // the state-store provider and the driver-side partition listing
-      // the pipeline actually runs with
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the program's own settings, so specs run the codegen cache,
+    // state-store provider and driver-side listing the pipeline runs
+    val s = GraftSession.builder(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
