@@ -34,13 +34,13 @@ object GraftSession {
       // partitioned table such as the IVF index's `cell=` layout).
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue)
       // Keep every generated class of the working set compiled. Spark's
-      // default cache holds 100 classes; the two live streaming queries
-      // with their MERGE upserts compile about 430 distinct classes, and
-      // the perfbench `queries` cells about 210, so at 100 each
-      // micro-batch and warm query evicts what the next one needs and
-      // runs Janino (then C1/C2 JIT) again: 686 and 511 compiles per
-      // run against 429 and 208 at this size. 1024 holds both with
-      // margin; a larger cache compiles no fewer (4000: 425 and 208).
+      // default cache holds 100 classes, but the two live streaming
+      // queries with their MERGE upserts use 429 distinct classes and
+      // the perfbench `queries` cells 208 (perfbench seed 1). At 100
+      // each micro-batch and warm query evicts classes the next one
+      // needs and runs Janino, then C1/C2 JIT, on them again: 683 and
+      // 515 compiles per run, against 429 and 208 at 1024, which holds
+      // both working sets with margin.
       .config("spark.sql.codegen.cache.maxEntries", 1024)
       // RocksDB state store for the production streaming pipeline: the
       // fMGWS task/worker state machines key on every open task — at

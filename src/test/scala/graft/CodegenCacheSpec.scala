@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
-
 /** The session's codegen cache holds a repeated workload's generated
   * classes, so a second round of the same queries compiles nothing.
   * With Spark's default 100-entry cache the round's 132 classes (run
@@ -19,14 +17,12 @@ class CodegenCacheSpec extends SparkSpec {
   // compile no class at all.
   private val AllowedRecompiles = 0L
 
-  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
   private def round(): Long = {
-    val c0 = compiles()
+    val c0 = Bench.codegenCompiles()
     Cells.foreach { name =>
       SparkEntry.queries(name)(spark, sf0001).write.format("noop").mode("overwrite").save()
     }
-    compiles() - c0
+    Bench.codegenCompiles() - c0
   }
 
   test("codegen: a repeated round of queries compiles nothing") {
