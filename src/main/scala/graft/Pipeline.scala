@@ -16,8 +16,9 @@ import graft.taskrouter.{Derivation, Ingest}
   * val segments = Pipeline.segments(spark, outPath)
   * val report   = graft.report.Report.conversationsReport(segments)
   *
-  * // streaming: file-source CloudEvents → changelog → latest tables
-  * val q = Pipeline.startStreaming(spark, watchDir, checkpoint, outPath)
+  * // streaming: file-source CloudEvents → MERGE-by-uuid latest tables
+  * val q = Pipeline.startStreamingMerged(spark, watchDir, checkpoint, outPath)
+  * val latest = Pipeline.mergedSegments(spark, outPath)
   * }}}
   */
 object Pipeline {
@@ -63,13 +64,6 @@ object Pipeline {
     }
   }
 
-  // The ingestion seam: every streaming entry point reads through an
-  // admission-bounded [[graft.sources.EventBusSource]]; the watchDir
-  // overloads below are the file-source convenience wrappers. A Kafka
-  // topic drops in as KafkaBusSource with maxOffsetsPerTrigger — same
-  // contract, no other change (BoundedTriggerSpec proves the seam with
-  // the file and rate sources).
-
   /** Derive and persist the reporting model from the event log. */
   def deriveTables(spark: SparkSession, logPath: String, outPath: String): Unit = {
     val parsed = EventLog.read(spark, logPath)
@@ -86,40 +80,10 @@ object Pipeline {
   def agents(spark: SparkSession, outPath: String): DataFrame =
     spark.read.parquet(s"$outPath/agents")
 
-  /** Continuous mode: watch a directory of CloudEvent JSON files, emit
-    * the segment changelog (append), maintaining `latest` on demand via
-    * [[latestSegments]]. Checkpointed — restart-safe, exactly-once into
-    * the changelog sink. */
-  def startStreaming(spark: SparkSession, watchDir: String,
-      checkpointDir: String, outPath: String,
-      trigger: Trigger = Trigger.AvailableNow(),
-      maxFilesPerTrigger: Option[Int] = Some(DefaultMaxFilesPerTrigger)): StreamingQuery =
-    startStreaming(spark,
-      graft.sources.FileBusSource(watchDir, maxFilesPerTrigger),
-      checkpointDir, outPath, trigger)
-
-  /** [[startStreaming]] over any admission-bounded bus source. */
-  def startStreaming(spark: SparkSession, source: graft.sources.EventBusSource,
-      checkpointDir: String, outPath: String,
-      trigger: Trigger): StreamingQuery = {
-    val raw = source.open(spark)
-    val changelog = StreamingPipeline.segmentsChangelog(spark,
-      StreamingPipeline.parseStream(spark, raw))
-    changelog.writeStream
-      .format("parquet")
-      .option("path", s"$outPath/segments_changelog")
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(trigger)
-      .start()
-  }
-
-  /** Latest state of the streamed changelog (MERGE-by-uuid view,
-    * recomputed over the full changelog — fine for bounded runs; long
-    * streams should use [[startStreamingMerged]]). */
-  def latestSegments(spark: SparkSession, outPath: String): DataFrame =
-    StreamingPipeline.latestSegments(
-      spark.read.parquet(s"$outPath/segments_changelog"))
+  // The ingestion seam: every streaming entry point reads through an
+  // admission-bounded [[graft.sources.EventBusSource]]; the watchDir
+  // overloads below are the file-source convenience wrappers
+  // (BoundedTriggerSpec proves the seam with the file and rate sources).
 
   /** Continuous mode with an incrementally-maintained latest table (the
     * reference's update-in-place behavior, routes/events.js:298-315):

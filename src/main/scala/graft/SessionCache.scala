@@ -204,10 +204,13 @@ object SessionCache {
     * only inside the one query building them; (2) corpus-proportional
     * single-query dedup frames whose consumers are pruned differently
     * per consumer (exchange reuse can't fire) — measured faster than
-    * the parquet round-trip at bench scale (r15 A/Bs), but routed
-    * through [[stage]] in a cluster deployment, where heap-resident
+    * the parquet round-trip at bench scale (r15 A/Bs). Both categories
+    * always take `localCheckpoint()`: [[GraftSession.builder]] only
+    * builds `local[N]` sessions, whose checkpoint blocks live in the
+    * one JVM beside the data they replace. On a cluster, heap-resident
     * checkpoint blocks of corpus-sized frames are the documented
-    * BENCH_r01 failure mode. Anything cross-query stays on
+    * BENCH_r01 failure mode; choosing [[stage]] there is ROADMAP
+    * direction 4, not code here. Anything cross-query stays on
     * [[stage]]/[[checkpointed]]. */
   def stageEphemeral(spark: SparkSession, key: String)(df: DataFrame): DataFrame = {
     stagedPlans.put(appPrefix(spark) + ledgerKey(key), df)

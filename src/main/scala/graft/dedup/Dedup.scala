@@ -749,11 +749,9 @@ object Dedup {
     * this corpus; a head key exercises all three verdicts and is what
     * prefix-dedup passes actually use for template-heavy pages).
     *
-    * ONE shared definition for both halves of incremental dedup: the
-    * batch side ([[qDedupIncremental]]) and the streaming side
-    * (`quality.CurationStream.dedupAgainstCorpus`) — the two layers
-    * must agree on what counts as a duplicate or the lambda
-    * architecture silently diverges. */
+    * ONE shared definition of "the same document" for incremental
+    * dedup ([[qDedupIncremental]]) and the quality queries that key on
+    * it, so they cannot disagree on what counts as a duplicate. */
   def headFingerprint(text: Column): Column =
     md5(concat_ws(" ", slice(split(text, " "), 1, 8)).cast("binary"))
 

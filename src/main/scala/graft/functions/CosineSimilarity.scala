@@ -105,14 +105,6 @@ object GraftFunctions {
       new ExpressionInfo(classOf[SpaceSavingTopK].getName, "spacesaving_topk"),
       (children: Seq[Expression]) =>
         SpaceSavingTopK(children(0), children(1)).toAggregateExpression())
-
-  private def all = Seq(cosineSim, sortedIntersectCount, spaceSavingTopK)
-
-  /** Register into an already-built session (tests, REPLs). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    all.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }
 
 /** The ONE SparkSessionExtensions entry point for the engine:

@@ -78,8 +78,7 @@ final case class SpaceSavingSummary(capacity: Int) {
 }
 
 object SpaceSavingSummary {
-  /** Byte codec shared by the aggregate's shuffle serialization and
-    * the streaming leg's state-store blobs. */
+  /** Byte codec of the aggregate's shuffle serialization. */
   def toBytes(buf: SpaceSavingSummary): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val out = new DataOutputStream(bos)

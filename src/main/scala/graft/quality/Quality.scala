@@ -34,7 +34,7 @@ object Quality {
 
   /** Adds the Gopher gate columns (rule metrics + flags +
     * `quality_pass`) to any frame with a `text` column — shared by the
-    * batch query and the streaming curation pipeline. */
+    * gate query and the curation queries that filter on it. */
   private[graft] def withQualityGate(df: DataFrame): DataFrame = {
     val stopList = stopwords.map(s => s"'$s'").mkString(", ")
     df.withColumn("ws", wordsCol)
@@ -491,18 +491,16 @@ object Quality {
       .orderBy($"source")
   }
 
-  /** The bottom-k sampling priority — ONE definition shared by the
-    * batch sampler and the streaming state variant
-    * (`StreamAggs.streamingBottomK`), so the two legs cannot draw
-    * different samples from the same corpus. */
+  /** The bottom-k sampling priority of [[sampleBottomK]]: a hash of
+    * the doc id, so a sample drawn from any union of corpus parts is
+    * the bottom-k of the parts' bottom-ks. */
   private[graft] def bottomKPri =
     expr("md5(cast(concat('bk|', cast(doc_id as string)) as binary))")
 
   def qSampleBottomK(spark: SparkSession, dir: String): DataFrame =
     sampleBottomK(Tables.load(spark, dir, "documents"))
 
-  /** Core of [[qSampleBottomK]] over any (lang, doc_id) frame —
-    * separated so the streaming-equals-batch spec can drive it. */
+  /** Core of [[qSampleBottomK]] over any (lang, doc_id) frame. */
   private[graft] def sampleBottomK(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -1571,18 +1569,17 @@ object Quality {
 
   /** URL canonicalization — THE shared definition of "the same page":
     * lowercase, strip scheme, strip leading `www.`, drop query and
-    * fragment, drop the trailing slash. [[urlFrame]] (both batch
-    * queries) and the streaming crawl-frontier leg
-    * ([[CurationStream.dedupByUrl]]) apply this verbatim, so batch
-    * and stream cannot disagree on which fetches are re-crawls. */
+    * fragment, drop the trailing slash. [[urlFrame]] applies it for
+    * both URL queries, so they cannot disagree on which fetches are
+    * re-crawls. */
   private[graft] def normalizeUrl(raw: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(regexp_replace(
       lower(raw), "^[a-z]+://", ""), "^www\\.", ""),
       "[?#].*$", ""), "/$", "")
 
-  /** The registered domain of a normalized URL — shared by the batch
-    * rollup ([[urlFrame]] → [[qDomainMix]]) and both streaming legs,
-    * same rule as [[normalizeUrl]]: one definition of "a domain". */
+  /** The registered domain of a normalized URL ([[urlFrame]] →
+    * [[qDomainMix]]), same rule as [[normalizeUrl]]: one definition of
+    * "a domain". */
   private[graft] def domainOf(url: Column): Column =
     substring_index(url, "/", 1)
 
@@ -2156,8 +2153,8 @@ object Quality {
     * cur land in the same row with no pivot; the per-type totals frame
     * (5 rows) broadcasts back. */
   /** The drift histogram's bin assignment — ONE definition shared by
-    * the batch monitor and the streaming feed (`streaming.StreamAggs
-    * .driftHistogram`) so the two legs cannot disagree on binning. */
+    * the drift monitor and [[psiDrift]], so the two cannot disagree on
+    * binning. */
   private[graft] def valueBin: Column =
     least(lit(9L), floor(col("value") / 50).cast("long"))
 
@@ -2216,11 +2213,7 @@ object Quality {
   }
 
   /** PSI from a pre-aggregated (event_type, vbin, ref_n, cur_n) count
-    * frame — the same statistic over counts that arrived some OTHER
-    * way, e.g. the streaming drift-histogram sink's finalized windows
-    * rolled into the two periods (StreamAggsSpec proves stream-fed ==
-    * batch-computed over one corpus). Shares every downstream step
-    * with [[psiDrift]] by construction. */
+    * frame — the second half of [[psiDrift]]. */
   private[graft] def psiFromCounts(counts: DataFrame): DataFrame = {
     // ONE aggregation builds totals AND the full 10-bin grid (bins as
     // 10-entry maps exploded back out — a bin empty in one period is
@@ -2533,11 +2526,8 @@ object Quality {
       .orderBy($"doc_id")
   }
 
-  /** The 256-row (b, w) bucket-weight table of [[qImportanceDsir]] —
-    * factored out because it is also the STORED artifact the streaming
-    * scorer ([[CurationStream.scoreImportance]]) reads: batch learns
-    * the weights over the corpus, the stream applies them to arriving
-    * docs with the identical expression. */
+  /** The 256-row (b, w) bucket-weight table of [[qImportanceDsir]],
+    * learned over the corpus and applied by [[withImportanceScore]]. */
   private[graft] def importanceWeights(docs: DataFrame): DataFrame = {
     val bucketed = docs
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
@@ -2555,9 +2545,7 @@ object Quality {
   /** Scores a doc frame against a (b, w) weight table: the weights
     * collapse to a 1-row map column riding a broadcast, and the score
     * is a per-row `aggregate` over the token array — no doc-keyed
-    * shuffle, no join back, so the SAME code path serves the batch
-    * query and the streaming scorer (stream-static equi-join on a
-    * constant key; stream rows never shuffle). */
+    * shuffle, no join back. */
   private[graft] def withImportanceScore(docs: DataFrame, weights: DataFrame): DataFrame = {
     val wmap = weights
       .agg(map_from_entries(collect_list(struct(col("b"), col("w")))).as("wmap"))

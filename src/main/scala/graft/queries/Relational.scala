@@ -2601,16 +2601,14 @@ object Relational {
     * sketch's count vector is what a monitoring pipeline stores).
     * Shape: one (type, bucket) map-side combine onto ≤|types|·64 rows,
     * windows over that tiny frame; audit reuses the shared ranking. */
-  /** The power-of-two bucket id of a cents amount — ONE expression
-    * shared by the batch sketch and the streaming histogram leg
-    * (`StreamAggs.quantileHistogram`). */
+  /** The power-of-two bucket id of a cents amount (the sketch's
+    * bucket vector of [[qQuantileSketch]]). */
   private[graft] def sketchBucketExpr: String =
     "CASE WHEN cents <= 0 THEN 0 ELSE length(bin(cents)) END"
 
   /** Quantile estimates off a merged (event_type, bucket, bc) count
-    * frame — the read side shared by [[qQuantileSketch]] and the
-    * streaming leg's finalized windows (sketch buckets merge by
-    * addition, so summing periods IS the whole-stream sketch). */
+    * frame — the read side of [[qQuantileSketch]] (sketch buckets
+    * merge by addition, so summed partial counts ARE the sketch). */
   private[graft] def quantileEstFromBuckets(buckets: DataFrame): DataFrame = {
     val spark = buckets.sparkSession
     import spark.implicits._

@@ -13,8 +13,7 @@ import org.apache.spark.sql.functions.col
   *    downstream ([[graft.streaming.StreamingPipeline.parseStream]]
   *    onward) is source-agnostic.
   *  - No micro-batch admits more than the source's bound of input:
-  *    `maxFilesPerTrigger` for the file watcher,
-  *    `maxOffsetsPerTrigger` for a Kafka topic, `rowsPerBatch` for the
+  *    `maxFilesPerTrigger` for the file watcher, `rowsPerBatch` for the
   *    rate source. Bounded admission is the property that makes a
   *    100 TB cold start drain as N memory-sized batches instead of one
   *    corpus-sized batch — the knob differs per source, the contract
@@ -35,36 +34,6 @@ final case class FileBusSource(watchDir: String,
     val reader = spark.readStream
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.text(watchDir)
-  }
-}
-
-/** A Kafka topic behind the same contract. Admission bound:
-  * `maxOffsetsPerTrigger` (total records per trigger across
-  * partitions — Kafka's exact analog of maxFilesPerTrigger). The
-  * connector is resolved by format name at runtime, so this compiles
-  * against core Spark and runs wherever `spark-sql-kafka-0-10` is on
-  * the classpath (no broker exists in this test container — the seam
-  * contract is proven by the other two sources in BoundedTriggerSpec;
-  * this class is the drop-in, not a stub: full reader wiring, value
-  * decode, nothing left to fill in).
-  *
-  * TESTED BOUNDARY (r13, see SCALE.md): the contract this class
-  * implements is covered by the file/rate cross-source equality in
-  * BoundedTriggerSpec; the Kafka-specific option plumbing and the
-  * connector CAST path are NOT testable in this sandbox (no broker,
-  * no kafka jar, no egress) — smoke-test one bounded micro-batch
-  * against a real topic on deploy. */
-final case class KafkaBusSource(bootstrapServers: String, topic: String,
-    maxOffsetsPerTrigger: Option[Long],
-    startingOffsets: String = "earliest") extends EventBusSource {
-  override def open(spark: SparkSession): DataFrame = {
-    val reader = spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-    maxOffsetsPerTrigger.foreach(n =>
-      reader.option("maxOffsetsPerTrigger", n))
-    reader.load().selectExpr("CAST(value AS STRING) AS value")
   }
 }
 

@@ -13,8 +13,9 @@ import graft.taskrouter.{Derivation, Ingest, Model}
   *  - the in-place updates the reference performs (CONVERSATION IN
   *    PROGRESS → CONVERSATION, reference routes/events.js:298-315; span
   *    close :639-664) become re-emissions under the SAME deterministic
-  *    uuid with a later emit_seq — a sink applies last-write-wins
-  *    (`latestSegments`, or MERGE-by-uuid in foreachBatch);
+  *    uuid with a later emit_seq — the MERGE-by-uuid sink
+  *    ([[MergeSink]]) applies last-write-wins, and [[latestSegments]]
+  *    is the same rule over a whole changelog (the specs' oracle);
   *  - the per-event base projection is computed declaratively BEFORE
   *    grouping (one codegen'd select) and carried through the typed
   *    state machine as JSON, so streaming and batch share the exact
@@ -367,26 +368,4 @@ object StreamingPipeline {
     byUuid.select(Seq(col("uuid")) ++
       Model.segmentColumns.drop(1).map(n => col(s"r.$n").as(n)): _*)
   }
-
-  /** Streaming agent dimension: last-write-wins aggregation — identical
-    * logic to batch Derivation.agents, legal in update/complete mode. */
-  def agentsStream(spark: SparkSession, parsed: DataFrame): DataFrame =
-    Derivation.agents(parsed)
-
-  /** Watermarked tumbling event-time aggregation (SURVEY §2.10): event
-    * counts per (window, eventtype). The input must already carry its
-    * event-time watermark (parseStream sets it; Spark disallows
-    * redefining one). In append mode a window emits once the watermark
-    * passes its end and its state is dropped — bounded state at any
-    * scale; late rows beyond the watermark are discarded
-    * deterministically (the reference has no late-data story at all,
-    * README.md:13). Same plan works in batch (the q_window_tumbling
-    * oracle shape). */
-  def eventCountsByWindow(parsed: DataFrame,
-      windowLen: String = "5 minutes"): DataFrame =
-    parsed
-      .groupBy(window(col("ts"), windowLen), col("eventtype"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"),
-        col("window.end").as("win_end"), col("eventtype"), col("n"))
 }

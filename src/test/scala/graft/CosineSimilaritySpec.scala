@@ -49,7 +49,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("registers for SQL via the shared function descriptor") {
-    graft.functions.GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS c").head.getDouble(0)
     assert(math.abs(r - 1.0) < 1e-12)

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 import graft.taskrouter.{Derivation, Ingest, Synth}
 
 /** End-to-end façade test: JSON → log → derived tables → report, and
-  * the checkpointed streaming variant over the same inputs. */
+  * the checkpointed MERGE-by-uuid streaming tables over the same inputs. */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -28,32 +28,6 @@ class PipelineSpec extends SparkSpec {
     assert(agents.count() == Synth.agents(spark, sf0001).count())
     val report = graft.report.Report.conversationsReport(segs)
     assert(report.count() == segs.count())
-  }
-
-  test("streaming pipeline: checkpointed file watch produces the same latest state") {
-    val watch = tmp("graft-watch")
-    val ckpt = tmp("graft-ckpt")
-    val out = tmp("graft-stream-out")
-    val events = Seq(
-      """{"id":"PL1","type":"com.twilio.taskrouter.task-queue.entered","data":{"payload":{"eventtype":"task-queue.entered","timestamp":"2026-08-12T10:00:00.400Z","task_sid":"WTpl","reservation_sid":"WRpl","worker_sid":"WKpl","task_queue_name":"Q"},"publisher_metadata":{"account_sid":"AC1"}}}""",
-      """{"id":"PL2","type":"com.twilio.taskrouter.reservation.created","data":{"payload":{"eventtype":"reservation.created","timestamp":"2026-08-12T10:00:05.900Z","task_sid":"WTpl","reservation_sid":"WRpl","worker_sid":"WKpl","task_queue_name":"Q"},"publisher_metadata":{"account_sid":"AC1"}}}""",
-      """{"id":"PL3","type":"com.twilio.taskrouter.reservation.accepted","data":{"payload":{"eventtype":"reservation.accepted","timestamp":"2026-08-12T10:00:30.123Z","task_sid":"WTpl","reservation_sid":"WRpl","worker_sid":"WKpl","task_queue_name":"Q"},"publisher_metadata":{"account_sid":"AC1"}}}""",
-      """{"id":"PL4","type":"com.twilio.taskrouter.reservation.completed","data":{"payload":{"eventtype":"reservation.completed","timestamp":"2026-08-12T10:02:40.789Z","task_sid":"WTpl","reservation_sid":"WRpl","worker_sid":"WKpl","task_queue_name":"Q"},"publisher_metadata":{"account_sid":"AC1"}}}""")
-    java.nio.file.Files.write(new java.io.File(watch, "a.jsonl").toPath,
-      events.take(2).mkString("\n").getBytes("UTF-8"))
-    val q1 = Pipeline.startStreaming(spark, watch, ckpt, out)
-    q1.awaitTermination(120000)
-    // second file arrives; restart from checkpoint picks it up
-    java.nio.file.Files.write(new java.io.File(watch, "b.jsonl").toPath,
-      events.drop(2).mkString("\n").getBytes("UTF-8"))
-    val q2 = Pipeline.startStreaming(spark, watch, ckpt, out)
-    q2.awaitTermination(120000)
-
-    val latest = Pipeline.latestSegments(spark, out)
-    val batch = Derivation.segments(
-      Ingest.parseJson(spark, spark.createDataset(events)))
-    assert(latest.orderBy("uuid").collect().toSeq ==
-      batch.orderBy("uuid").collect().toSeq)
   }
 
   test("incremental MERGE-by-uuid sink maintains the latest table across micro-batches") {

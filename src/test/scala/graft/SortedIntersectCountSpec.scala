@@ -21,7 +21,6 @@ class SortedIntersectCountSpec extends SparkSpec {
   }
 
   test("registers as a SQL function alongside cosine_sim") {
-    graft.functions.GraftFunctions.register(spark)
     val n = spark.sql(
       "SELECT sorted_intersect_count(array(1L, 2L, 5L), array(2L, 3L, 5L)) AS c")
       .head.getLong(0)

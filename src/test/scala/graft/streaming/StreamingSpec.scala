@@ -128,26 +128,6 @@ class StreamingSpec extends SparkSpec {
     assertEquivalent(StreamingPipeline.latestSegments(spark.table(name)), batchSegments(ev))
   }
 
-  test("streaming agents aggregation (complete mode) equals batch dim") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val ev = scenario
-    qn += 1
-    val name = s"agents_stream_$qn"
-    val input = MemoryStream[String]
-    val parsed = Ingest.parseJson(spark, input.toDF().as[String])
-    val agents = StreamingPipeline.agentsStream(spark, parsed)
-    val q = agents.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try {
-      input.addData(ev.take(6)); q.processAllAvailable()
-      input.addData(ev.drop(6)); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table(name).orderBy("agent_uuid").collect().toSeq
-    val batch = Derivation.agents(Ingest.parseJson(spark, spark.createDataset(ev)))
-      .orderBy("agent_uuid").collect().toSeq
-    assert(streamed == batch)
-  }
-
   test("duplicate accepted: only the first in-progress row converts (batch == stream)") {
     val ev = Seq(
       ce("task-queue.entered", "2026-08-12T11:00:00.000Z", taskFields: _*),
@@ -198,29 +178,6 @@ class StreamingSpec extends SparkSpec {
     // falls back to the 12:10:00 entry → 30s in queue
     val q = b.filter($"segment_kind" === "QUEUE").collect()
     assert(q.length == 1 && q(0).getAs[Long]("queue_time") == 30L)
-  }
-
-  test("watermarked tumbling window aggregation equals batch windowed counts") {
-    import org.apache.spark.sql.functions._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    qn += 1
-    val name = s"win_counts_$qn"
-    val input = MemoryStream[String]
-    val counts = StreamingPipeline.eventCountsByWindow(
-      StreamingPipeline.parseStream(spark, input.toDF()))
-    val q = counts.writeStream.format("memory").queryName(name)
-      .outputMode("complete").start()
-    try { input.addData(scenario); q.processAllAvailable() } finally q.stop()
-    val streamed = spark.table(name)
-      .orderBy("win_start", "eventtype").collect().toSeq
-    val batch = Ingest.parseJson(spark, spark.createDataset(scenario))
-      .groupBy(window($"ts", "5 minutes"), $"eventtype")
-      .agg(count(lit(1)).as("n"))
-      .select($"window.start".as("win_start"), $"window.end".as("win_end"),
-        $"eventtype", $"n")
-      .orderBy("win_start", "eventtype").collect().toSeq
-    assert(streamed.nonEmpty)
-    assert(streamed == batch)
   }
 
   test("changelog upserts: completed converts the in-progress row in place") {
